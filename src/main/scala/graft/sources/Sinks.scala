@@ -67,10 +67,39 @@ object Sinks {
     spark.read.parquet(target)
   }
 
+  /** Backup directory names: `backup_yyyyMMdd_HHmmss`, plus `_<n>` for the
+    * n-th further backup taken within the same second. */
+  private val BackupName = """backup_(\d{8}_\d{6})(?:_(\d+))?""".r
+
+  /** Creation order of a [[snapshotOverwrite]] backup directory: (instant
+    * of its second, same-second counter), or None for any other name —
+    * the one parser [[readSnapshotAsOf]] and [[vacuumBackups]] share.
+    * STRICT: SimpleDateFormat alone is lenient (it stops at trailing text
+    * and rolls over impossible dates), which would make a manual copy like
+    * `backup_20250101_101010_keep` look like a backup. */
+  private def backupOrder(name: String): Option[(Long, Int)] = name match {
+    case BackupName(ts, n) =>
+      val fmt = new java.text.SimpleDateFormat("yyyyMMdd_HHmmss")
+      fmt.setLenient(false)
+      scala.util.Try(fmt.parse(ts).getTime).toOption
+        .map(_ -> Option(n).fold(0)(_.toInt))
+    case _ => None
+  }
+
+  /** The [[backupOrder]]-sorted backups under `backupRoot`, oldest first. */
+  private def backupsOf(fs: org.apache.hadoop.fs.FileSystem,
+                        backupRoot: String): Seq[((Long, Int), Path)] =
+    if (!fs.exists(new Path(backupRoot))) Seq.empty
+    else fs.listStatus(new Path(backupRoot)).map(_.getPath).toSeq
+      .flatMap(p => backupOrder(p.getName).map(_ -> p))
+      .sortBy(_._1)
+
   /** S9 — snapshot-versioned overwrite: if the target exists and is
     * non-empty, it survives as `<backupRoot>/backup_<ts>` (the reference's
     * timestamped backup tables) via a metadata-only rename, and the new
-    * snapshot replaces it via staging dir + rename. Returns the backup
+    * snapshot replaces it via staging dir + rename. A further backup in
+    * the same second becomes `backup_<ts>_<n>` — renaming onto an existing
+    * directory would nest the old snapshot inside it. Returns the backup
     * path, if one was taken. See the object doc for the crash protocol;
     * `crashPoint` is a test hook fired between protocol steps. */
   def snapshotOverwrite(spark: SparkSession, df: DataFrame, target: String,
@@ -91,7 +120,10 @@ object Sinks {
       if (oldNonEmpty) {
         val ts = new java.text.SimpleDateFormat("yyyyMMdd_HHmmss")
           .format(new java.util.Date(clock()))
-        val b = new Path(s"$backupRoot/backup_$ts")
+        val b = Iterator.from(0)
+          .map(n => if (n == 0) s"backup_$ts" else s"backup_${ts}_$n")
+          .map(name => new Path(backupRoot, name))
+          .find(!fs.exists(_)).get
         val parent = b.getParent
         if (parent != null) fs.mkdirs(parent)
         if (!fs.rename(targetPath, b)) // metadata-only, never a data copy
@@ -188,9 +220,9 @@ object Sinks {
   }
 
   /** Time-travel read over the [[snapshotOverwrite]] backup chain: the
-    * snapshot as it existed AT `asOfMillis` — the newest
-    * `backup_yyyyMMdd_HHmmss` whose overwrite happened strictly AFTER the
-    * asked instant holds that instant's data (each backup is the state
+    * snapshot as it existed AT `asOfMillis` — the oldest
+    * `backup_yyyyMMdd_HHmmss[_n]` whose overwrite happened strictly AFTER
+    * the asked instant holds that instant's data (each backup is the state
     * REPLACED at its timestamp); if every backup predates the instant (or
     * none exist), the live target is current as of it. None when the
     * table didn't exist yet at `asOfMillis` (asked instant earlier than
@@ -203,20 +235,8 @@ object Sinks {
                        backupRoot: String, asOfMillis: Long): DataFrame = {
     val fs = fsOf(spark)
     recover(spark, target)
-    val fmt = new java.text.SimpleDateFormat("yyyyMMdd_HHmmss")
-    val backups = (
-      if (fs.exists(new Path(backupRoot)))
-        fs.listStatus(new Path(backupRoot)).map(_.getPath)
-          .filter(_.getName.startsWith("backup_")).toSeq
-      else Seq.empty)
-      .flatMap { p =>
-        scala.util.Try(
-          fmt.parse(p.getName.stripPrefix("backup_")).getTime).toOption
-          .map(_ -> p)
-      }
-      .sortBy(_._1)
     // the earliest backup taken after the instant = the state at the instant
-    backups.find { case (ts, _) => ts > asOfMillis } match {
+    backupsOf(fs, backupRoot).find { case ((ts, _), _) => ts > asOfMillis } match {
       case Some((_, p)) => spark.read.parquet(p.toString)
       case None => spark.read.parquet(target)
     }
@@ -256,27 +276,13 @@ object Sinks {
     * — after a vacuum, [[readSnapshotAsOf]] can only travel as far back
     * as the oldest kept backup (that is the retention contract, same as
     * any lakehouse VACUUM). Only directories matching the
-    * `backup_yyyyMMdd_HHmmss` pattern are candidates — anything else
+    * `backup_yyyyMMdd_HHmmss[_n]` pattern are candidates — anything else
     * under the root is never touched. Returns the deleted paths. */
   def vacuumBackups(spark: SparkSession, backupRoot: String,
                     keepLast: Int): Seq[String] = {
     require(keepLast >= 0, "keepLast must be >= 0")
     val fs = fsOf(spark)
-    if (!fs.exists(new Path(backupRoot))) return Seq.empty
-    // STRICT name match — SimpleDateFormat alone is lenient (it stops at
-    // trailing text and rolls over impossible dates), which would make a
-    // manual copy like backup_20250101_101010_keep a deletion candidate
-    val fmt = new java.text.SimpleDateFormat("yyyyMMdd_HHmmss")
-    fmt.setLenient(false)
-    val backups = fs.listStatus(new Path(backupRoot)).map(_.getPath)
-      .filter(_.getName.matches("backup_\\d{8}_\\d{6}"))
-      .flatMap { p =>
-        scala.util.Try(
-          fmt.parse(p.getName.stripPrefix("backup_")).getTime).toOption
-          .map(_ -> p)
-      }
-      .sortBy(_._1)
-    val doomed = backups.dropRight(keepLast).map(_._2)
+    val doomed = backupsOf(fs, backupRoot).dropRight(keepLast).map(_._2)
     doomed.foreach(p => fs.delete(p, true))
     doomed.map(_.toString).toSeq
   }
@@ -477,10 +483,8 @@ object Sinks {
                         archiveDir: String, checkpoint: String): StreamingQuery = {
     XmlDeclarations.readStreamRaw(spark, srcDir, Some(archiveDir))
       .writeStream
-      // cleanse() uses a ranking window (file-local ordinal -> item_seq),
-      // which streaming plans reject — run it per micro-batch; correctness
-      // is unaffected because the window partitions by source file and a
-      // file is never split across batches.
+      // rows arrive numbered by the parser and cleanse() is row-local, so
+      // each micro-batch is one map-only stage into a plain parquet append
       .foreachBatch { (batch: DataFrame, _: Long) =>
         append(XmlDeclarations.cleanse(batch), target)
       }

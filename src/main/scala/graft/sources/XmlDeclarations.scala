@@ -6,7 +6,6 @@ import java.util.zip.ZipInputStream
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
@@ -29,23 +28,24 @@ import graft.functions.GraftFunctions._
   *    price) happens as codegen'd Column expressions AFTER the parse, so
   *    Catalyst can prune/push/fold them.
   *  - Per-HAWB 1-based `item_sequence` (the reference's streaming counter,
-  *    `import_xml_history.py:44,56,73`) is a `row_number` window over
-  *    (file, hawb) ordered by the carried ordinal — the explicit-order
-  *    translation of pandas' implicit row order. Partitioning is per
-  *    (file, hawb): bounded frames, no global sort, no skew beyond a single
-  *    bill's size.
+  *    `import_xml_history.py:44,56,73`) is counted by the parser itself in
+  *    document order, like the reference. A document is parsed whole by
+  *    one task, so the count needs no exchange, sort or window: every read
+  *    path (batch [[read]], the streaming drain, the `customs-xml` DSv2
+  *    source) is a single map-only stage.
   *
   * Lineage: `data_source_file` is `<file>` for plain xml and
   * `<zip>::<member>` for zip members (ref `:59,154`).
   */
 object XmlDeclarations {
 
-  /** One raw BID_HEAD extraction: untyped strings + document ordinal.
-    * Covers the reference's 17 read fields plus the 18 declared-but-unread
+  /** One raw BID_HEAD extraction: untyped strings, the document ordinal
+    * and the per-(document, raw HAWB_NO) 1-based `item_sequence`. Covers
+    * the reference's 17 read fields plus the 18 declared-but-unread
     * extended fields (SURVEY §1.3 — tax amounts, exchange rates, document
     * dates/types, broker metadata) that declarations analytics wants. */
   case class RawBid(
-      data_source_file: String, ordinal: Int,
+      data_source_file: String, ordinal: Int, item_sequence: Int,
       dcl_doc_no: String, mawb_no: String, hawb_no: String, flight_no: String,
       import_date_raw: String, description_official: String, ccc_code: String,
       qty_raw: String, qty_unit: String, item_total_raw: String,
@@ -60,7 +60,7 @@ object XmlDeclarations {
       currency: String, ex_rate_raw: String, hawb_ex_rate_raw: String,
       coloader: String, cnee_c_name: String, broker_box_no: String)
 
-  private val fields = Set(
+  private val fields = Array(
     "DCL_DOC_NO", "MAWB", "HAWB_NO", "FLY_NO", "IMPORT_DATE", "DESCRIPTION",
     "CLASSIFY_NO", "QTY", "QTY_UM", "PAY_TAX_AMT", "FOB_AMT_TWD",
     "IMPORT_DUTY_RATE", "CNEE_BAN_ID", "CNEE_E_NAME", "OTHER_ITEN_2",
@@ -70,45 +70,68 @@ object XmlDeclarations {
     "DOC_DATE", "CNEE_CODE", "TAX_AMT1", "TAX_AMT3", "TAX_AMT4",
     "TOT_TAX_AMT", "TAX_BASE", "CURRENCY", "EX_RATE", "HAWB_EX_RATE",
     "COLOADER", "CNEE_C_NAME", "BROKER_BOX_NO")
+  private val fieldIndex: Map[String, Int] = fields.zipWithIndex.toMap
+  private val HawbNo = fieldIndex("HAWB_NO")
 
-  /** Pull-parse one XML document, emitting BID_HEAD field maps in document
-    * order. The embedded XSD also *mentions* BID_HEAD (as
+  /** StAX factories are not documented thread-safe, and building one per
+    * document costs a service lookup; one per task thread serves every
+    * document that thread parses. */
+  private val xmlFactory = ThreadLocal.withInitial[XMLInputFactory] { () =>
+    val f = XMLInputFactory.newInstance()
+    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
+    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
+    f
+  }
+
+  /** Pull-parse one XML document into raw rows in document order. The
+    * embedded XSD also *mentions* BID_HEAD (as
     * `<xs:element name="BID_HEAD">`), but those are `element` nodes — only
     * real `<BID_HEAD>` data elements match here, same as the reference's
-    * `findall('.//BID_HEAD')`. */
-  private def parseXml(in: InputStream): Seq[Map[String, String]] = {
-    val factory = XMLInputFactory.newInstance()
-    factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    factory.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    val r: XMLStreamReader = factory.createXMLStreamReader(in)
-    val out = Seq.newBuilder[Map[String, String]]
+    * `findall('.//BID_HEAD')`. Each row carries its document ordinal and
+    * its 1-based position among the document's rows with the same raw
+    * `HAWB_NO` string (W1, the reference's `hawb_item_counters[hawb] += 1`,
+    * ref `:44,56,73`). Numbering keys on the raw string, so it is exactly
+    * `row_number()` over (document, raw hawb) by ordinal; the blank-HAWB
+    * filter in [[cleanse]] depends on that key alone, so it drops whole
+    * keys and never leaves a gap. */
+  private def parseXml(src: String, in: InputStream): Seq[RawBid] = {
+    val r: XMLStreamReader = xmlFactory.get().createXMLStreamReader(in)
+    val out = Seq.newBuilder[RawBid]
+    val perHawb = scala.collection.mutable.HashMap.empty[String, Int]
+    var ordinal = 0
     try {
       while (r.hasNext) {
         if (r.next() == XMLStreamConstants.START_ELEMENT &&
             r.getLocalName == "BID_HEAD") {
-          var m = Map.empty[String, String]
+          val v = new Array[String](fields.length) // null = element absent
           var done = false
           while (!done && r.hasNext) {
             r.next() match {
               case XMLStreamConstants.START_ELEMENT =>
-                val name = r.getLocalName
+                val i = fieldIndex.getOrElse(r.getLocalName, -1)
                 val text = r.getElementText // simple-content children only
-                if (fields.contains(name)) m += name -> text
+                if (i >= 0) v(i) = text
               case XMLStreamConstants.END_ELEMENT
                   if r.getLocalName == "BID_HEAD" => done = true
               case _ =>
             }
           }
-          out += m
+          val hawb = if (v(HawbNo) == null) "" else v(HawbNo)
+          val seq = perHawb.getOrElse(hawb, 0) + 1
+          perHawb.update(hawb, seq)
+          out += toRaw(src, ordinal, seq, v)
+          ordinal += 1
         }
       }
     } finally r.close()
     out.result()
   }
 
-  private def toRaw(src: String, ordinal: Int, m: Map[String, String]): RawBid = {
-    def g(k: String) = m.getOrElse(k, "")
-    RawBid(src, ordinal,
+  /** `v` holds BID_HEAD child texts in [[fields]] order. */
+  private def toRaw(src: String, ordinal: Int, itemSequence: Int,
+                    v: Array[String]): RawBid = {
+    def g(k: String) = { val s = v(fieldIndex(k)); if (s == null) "" else s }
+    RawBid(src, ordinal, itemSequence,
       dcl_doc_no = g("DCL_DOC_NO"), mawb_no = g("MAWB"), hawb_no = g("HAWB_NO"),
       flight_no = g("FLY_NO"), import_date_raw = g("IMPORT_DATE"),
       description_official = g("DESCRIPTION"), ccc_code = g("CLASSIFY_NO"),
@@ -136,7 +159,7 @@ object XmlDeclarations {
   def parseFile(path: String, content: Array[Byte]): Seq[RawBid] = {
     val name = path.substring(path.lastIndexOf('/') + 1)
     def safeParse(src: String, in: InputStream): Seq[RawBid] =
-      try parseXml(in).zipWithIndex.map { case (m, i) => toRaw(src, i, m) }
+      try parseXml(src, in)
       catch { case _: Exception => Seq.empty }
     if (name.toLowerCase.endsWith(".zip")) {
       val zis = new ZipInputStream(new ByteArrayInputStream(content))
@@ -172,8 +195,8 @@ object XmlDeclarations {
       .flatMap { case (p, c) => parseFile(p, c) }
   }
 
-  /** Full `table_b_history` ingestion: parse, drop blank-HAWB rows, assign
-    * per-(file, HAWB) 1-based item_sequence in document order, cleanse. */
+  /** Full `table_b_history` ingestion: parse (which numbers items per
+    * (file, HAWB) in document order), drop blank-HAWB rows, cleanse. */
   def read(spark: SparkSession, dir: String): DataFrame =
     cleanse(readRaw(spark, dir).toDF())
 
@@ -182,8 +205,9 @@ object XmlDeclarations {
   def readDecimal(spark: SparkSession, dir: String): DataFrame =
     cleanse(readRaw(spark, dir).toDF(), decimalMoney = true)
 
-  /** The cleansing/sequencing plan, separated so tests and the streaming
-    * variant share it. Expects RawBid-shaped input.
+  /** The cleansing plan, separated so tests, the streaming variant and
+    * the DSv2 source share it. Expects RawBid-shaped input; row-local, so
+    * it plans as one map-only stage.
     *
     * `decimalMoney = true` switches every money column (item/hawb totals,
     * derived unit price, tax amounts) to DECIMAL(18,4), coerced straight
@@ -197,11 +221,12 @@ object XmlDeclarations {
     val unitP: (Column, Column) => Column =
       if (decimalMoney) (t, q) => unitPriceDec(t, q)
       else (t, q) => unitPrice(numOrZero(t), numOrZero(q))
-    val seqW = Window.partitionBy("data_source_file", "hawb_no")
-      .orderBy("ordinal")
+    // isoDate's NULL-on-garbage twin: to_date(s) is cast(s AS date), which
+    // under ANSI fails the whole query on '' or junk
+    val dateOrNull: Column => Column =
+      c => substring_index(c, "T", 1).try_cast("date")
     raw
       .where(trim(col("hawb_no")) =!= "") // P3, ref :51-53
-      .withColumn("item_sequence", row_number().over(seqW)) // W1, ref :44,56,73
       .select(
         col("data_source_file"),
         cleanDocNo(col("dcl_doc_no")).as("dcl_doc_no"), // F1, ref :26-33
@@ -209,7 +234,7 @@ object XmlDeclarations {
         strTrim(col("hawb_no")).as("hawb_no"),
         strTrim(col("flight_no")).as("flight_no"),
         isoDate(col("import_date_raw")).as("import_date"), // F5, ref :66-71
-        col("item_sequence"),
+        col("item_sequence"), // W1, numbered by the parser
         col("description_official"),
         col("ccc_code"),
         numOrZero(col("qty_raw")).as("qty"), // F6, ref :78-82
@@ -221,15 +246,16 @@ object XmlDeclarations {
         col("duty_rate"),
         col("consignee_id"), col("consignee_name"), col("consignee_phone"),
         col("shipper_name"), col("export_port"),
-        // extended fields, typed: ids/sequences and exchange rates coerce
-        // to NULL on absence (0 would be fictional); money amounts follow
-        // the reference's F6 coerce-to-zero convention
+        // extended fields, typed: ids/sequences, dates and exchange rates
+        // coerce to NULL on absence or garbage (0 or a failed drain would
+        // be fictional); money amounts follow the reference's F6
+        // coerce-to-zero convention
         col("auto_seq_raw").try_cast("long").as("auto_seq"),
         col("seq_no_raw").try_cast("double").as("seq_no"),
         strTrim(col("dcl_doc_type")).as("dcl_doc_type"),
         strTrim(col("dcl_doc_no_5")).as("dcl_doc_no_5"),
-        isoDate(col("dcl_date_raw")).as("dcl_date"),
-        isoDate(col("doc_date_raw")).as("doc_date"),
+        dateOrNull(col("dcl_date_raw")).as("dcl_date"),
+        dateOrNull(col("doc_date_raw")).as("doc_date"),
         strTrim(col("cnee_code")).as("cnee_code"),
         money(col("tax_amt1_raw")).as("tax_amt1"),
         money(col("tax_amt3_raw")).as("tax_amt3"),
@@ -248,9 +274,8 @@ object XmlDeclarations {
     * file stream, with processed inputs archived by the source itself
     * (`cleanSource=archive` — the exactly-once upgrade of the reference's
     * import-then-`shutil.move` loop, ref `import_xml_history.py:205-211`).
-    * Sequencing/cleansing happens per micro-batch in the sink's
-    * `foreachBatch` (ranking windows aren't stream-plannable, and the
-    * ordinal is file-local so batch-at-a-time is semantically exact). */
+    * Rows arrive already numbered; cleansing happens per micro-batch in the
+    * sink's `foreachBatch`. */
   def readStreamRaw(spark: SparkSession, dir: String,
                     archiveDir: Option[String] = None): DataFrame = {
     import spark.implicits._

@@ -26,7 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * }}}
   *
   * Emits the RAW extraction schema (one row per BID_HEAD, untyped strings +
-  * document ordinal — [[XmlDeclarations.RawBid]]); compose with
+  * document ordinal + the parser-numbered per-HAWB `item_sequence` —
+  * [[XmlDeclarations.RawBid]]); compose with
   * [[XmlDeclarations.cleanse]] for the typed table. Planning creates one
   * input partition per file (a zip is one work unit, exactly like the
   * `binaryFile` path), and required-column pushdown prunes the emitted
@@ -168,7 +169,7 @@ object XmlDeclarationsSource {
             while (i < projection.length) {
               out(i) = bid.productElement(projection(i)) match {
                 case s: String => UTF8String.fromString(s)
-                case v => v // ordinal: Int
+                case v => v // ordinal, item_sequence: Int
               }
               i += 1
             }

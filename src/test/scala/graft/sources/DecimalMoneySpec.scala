@@ -54,7 +54,7 @@ class DecimalMoneySpec extends SparkSpec {
     // upgrade removes.
     val n: String = null
     val allRaw = Seq(XmlDeclarations.RawBid(
-      data_source_file = "f.xml", ordinal = 1,
+      data_source_file = "f.xml", ordinal = 1, item_sequence = 1,
       dcl_doc_no = "D1", mawb_no = "M1", hawb_no = "H1", flight_no = "FL",
       import_date_raw = "2025-01-02T00:00:00",
       description_official = "desc", ccc_code = "ccc",

@@ -215,6 +215,28 @@ class SinksSpec extends SparkSpec {
     assert(leftovers.isEmpty)
   }
 
+  test("snapshot overwrite: same-second backups get distinct names, none hidden") {
+    import spark.implicits._
+    val root = tmp()
+    val target = s"$root/kb"
+    val clock = () => 1700000000000L // every call in the same second
+    Sinks.snapshotOverwrite(spark, Seq(1).toDF("v"), target, root, clock)
+    val b2 = Sinks.snapshotOverwrite(spark, Seq(1, 2).toDF("v"), target, root, clock)
+    val b3 = Sinks.snapshotOverwrite(spark, Seq(1, 2, 3).toDF("v"), target, root, clock)
+    assert(b2.isDefined && b3.isDefined && b2 != b3)
+    def rows(p: String) = spark.read.parquet(p).as[Int].collect().sorted.toSeq
+    assert(rows(b2.get) === Seq(1))
+    assert(rows(b3.get) === Seq(1, 2)) // not nested inside b2
+    assert(!new java.io.File(b2.get.stripPrefix("file:"), "kb").exists())
+    assert(rows(target) === Seq(1, 2, 3))
+    // time travel and retention order same-second backups by creation
+    assert(Sinks.readSnapshotAsOf(spark, target, root, 1699999999000L)
+      .as[Int].collect().toSeq === Seq(1))
+    val deleted = Sinks.vacuumBackups(spark, root, keepLast = 1)
+    assert(deleted.size === 1 && deleted.head.endsWith(b2.get))
+    assert(rows(b3.get) === Seq(1, 2))
+  }
+
   test("snapshot overwrite: crash at ANY protocol step loses no snapshot") {
     import spark.implicits._
     class Boom extends RuntimeException("injected crash")
