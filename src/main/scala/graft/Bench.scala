@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}.
   *
@@ -166,6 +168,20 @@ object Bench {
       .getOrElse("other")
   }
 
+  /** A bench section that could not run, as the JSON field
+    * `,"<name>":"skipped: <reason>"`: the artifact says why instead of
+    * dropping the field. The reason loses quotes, backslashes and control
+    * characters (the line stays valid JSON) and is cut to 80 characters,
+    * so two skipped sections still fit the stdout tail budget. */
+  private[graft] def skippedField(name: String, reason: String): String = {
+    val clean = reason.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(80)
+    s""","$name":"skipped: $clean""""
+  }
+
+  /** A failed section's reason: the exception class and message. */
+  private def failureReason(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${e.getMessage}"
+
   /** Deny-filter for ONE known-benign log pattern (root-caused r16, see
     * SCALE.md): `DAGScheduler: Failed to update accumulator N (Unknown
     * class)` + its `attempted to access non-existent accumulator` stack.
@@ -217,16 +233,20 @@ object Bench {
     // measures the partition-pruned read path ("index once, query many"),
     // so the layout build is timed separately as ivf_layout_build_sec —
     // folding it into the first rep made the median conflate build+query.
-    val ivfBuildSec =
+    val ivfBuild =
       if (only.forall(_.contains("knn_ivf_at_rest")))
         try {
           val t0 = System.nanoTime()
-          graft.operators.Similarity.ivfExactLayoutFor(
+          graft.operators.Similarity.ivfLayoutFor(
             Tables(spark, sfDir, "embeddings"), "vec_id", "embedding",
-            key = sfDir, dim = 64)
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable => None }
-      else None
+            key = sfDir, dim = 64, nlist = 16, iters = 2)
+          f""","ivf_layout_build_sec":${(System.nanoTime() - t0) / 1e9}%.3f"""
+        } catch {
+          case NonFatal(e) =>
+            skippedField("ivf_layout_build_sec", failureReason(e))
+        }
+      else skippedField("ivf_layout_build_sec",
+        "knn_ivf_at_rest not in SPARK_GRAFT_BENCH_ONLY")
     // Box-load canary (r15 advice #6): a fixed fast 3-query subset runs
     // best-of-3 BEFORE and AFTER the battery, so "the +10% was machine
     // load" is measured in the artifact instead of argued from history —
@@ -400,14 +420,19 @@ object Bench {
     val ingest =
       try {
         val dir = "/root/reference/uploads/xml_history/processed"
-        if (only.isEmpty && new java.io.File(dir).isDirectory) {
+        if (only.nonEmpty)
+          skippedField("xml_ingest", "SPARK_GRAFT_BENCH_ONLY run")
+        else if (!new java.io.File(dir).isDirectory)
+          skippedField("xml_ingest", s"no reference zips in $dir")
+        else {
           val t0 = System.nanoTime()
           val rows = graft.sources.XmlDeclarations.read(spark, dir).count()
           val sec = (System.nanoTime() - t0) / 1e9
           f""","xml_ingest_rows":$rows,"xml_ingest_sec":$sec%.3f,"xml_ingest_rows_per_sec":${rows / sec}%.0f,"baseline_rows_per_sec":1457"""
-        } else ""
-      } catch { case _: Throwable => "" }
-    val ivfBuild = ivfBuildSec.map(s => f""","ivf_layout_build_sec":$s%.3f""").getOrElse("")
+        }
+      } catch {
+        case NonFatal(e) => skippedField("xml_ingest", failureReason(e))
+      }
 
     // Complete artifact: every query's median + p25/p75, same shape as the
     // old stdout line. Written to the working directory so later rounds

@@ -30,6 +30,19 @@ object SparkEntry {
   private val ivfAppendLayouts = new SessionMemo[String, String]()
   private val ivfFilteredLayouts = new SessionMemo[String, String]()
 
+  /** The fixed-codebook IVF layout carrying `label`, built once per
+    * (session, dataset); shared by `knn_ivf_filtered` and
+    * `knn_radius_ivf`. */
+  private def ivfFilteredLayout(s: SparkSession, dir: String,
+                                emb: DataFrame): String =
+    ivfFilteredLayouts.getOrCompute(s, dir) {
+      val p = graft.TmpArtifacts.path("graft-ivf-filtered", dir)
+      Similarity.writeIvf(emb, "vec_id", "embedding", p,
+        Similarity.fixedCodebook(nlist = 4, dims = 64),
+        extraCols = Seq("label"))
+      p
+    }
+
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
@@ -1447,16 +1460,9 @@ object SparkEntry {
     // is hash-oracled; pruned ⊆ full pinned in SimilaritySpec
     "knn_radius_ivf" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val cb = Similarity.fixedCodebook(nlist = 4, dims = 64)
-      val path = SparkEntry.ivfFilteredLayouts.getOrCompute(s, dir) {
-        val p = graft.TmpArtifacts.path("graft-ivf-filtered", dir)
-        Similarity.writeIvfFixed(emb, "vec_id", "embedding", p, cb,
-          extraCols = Seq("label"))
-        p
-      }
-      Similarity.knnRadiusFixedPartitioned(s, path,
+      Similarity.knnRadiusPartitioned(s, ivfFilteredLayout(s, dir, emb),
         emb.where(col("vec_id") < 20), "vec_id", "embedding",
-        centroids = cb, nprobe = 2, simSqPpm = 160000L)
+        nprobe = 2, simSqPpm = 160000L)
     }),
 
     "knn_bucketed" -> ((s, dir) => {
@@ -1488,11 +1494,11 @@ object SparkEntry {
 
     // IVF over a FIXED literal codebook with exact-integer scoring — the
     // ANN tier with a FULL hash oracle: quantize/assign/probe/score/top-k
-    // are all replayed by DuckDB over the same parquet (the learned tiers
-    // below stay rows-only with spec-pinned recall)
+    // are all replayed by DuckDB over the same parquet (knn_ivf below is
+    // the same search under the trained codebook)
     "knn_ivf_fixed" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      Similarity.knnIvfFixed(emb, emb.where(col("vec_id") < 20),
+      Similarity.knnIvf(emb, emb.where(col("vec_id") < 20),
         "vec_id", "embedding", k = 5,
         centroids = Similarity.fixedCodebook(nlist = 4, dims = 64),
         nprobe = 2)
@@ -1511,24 +1517,25 @@ object SparkEntry {
 
     // INCREMENTAL layout growth under the full oracle: the fixed-codebook
     // at-rest layout is built on a BASE slice and grown by appending the
-    // remaining rows (frozen literal codebook, existing files untouched),
-    // then queried partition-pruned. The oracle is knn_ivf_fixed's SQL
-    // over the full corpus — a hash match proves the append is invisible
-    // to queries, the contract appendToIvf's scaladoc states
+    // remaining rows (the layout's persisted codebook, existing files
+    // untouched), then queried partition-pruned. The oracle is
+    // knn_ivf_fixed's SQL over the full corpus — a hash match proves the
+    // append is invisible to queries, the contract appendToIvf's scaladoc
+    // states
     "knn_ivf_append" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val cb = Similarity.fixedCodebook(nlist = 4, dims = 64)
       val path = SparkEntry.ivfAppendLayouts.getOrCompute(s, dir) {
         val p = graft.TmpArtifacts.path("graft-ivf-append", dir)
-        Similarity.writeIvfFixed(emb.where(col("vec_id") % 5 =!= 0),
-          "vec_id", "embedding", p, cb)
-        Similarity.writeIvfFixed(emb.where(col("vec_id") % 5 === 0),
-          "vec_id", "embedding", p, cb, append = true)
+        Similarity.writeIvf(emb.where(col("vec_id") % 5 =!= 0),
+          "vec_id", "embedding", p,
+          Similarity.fixedCodebook(nlist = 4, dims = 64))
+        Similarity.appendToIvf(emb.where(col("vec_id") % 5 === 0),
+          "vec_id", "embedding", p)
         p
       }
-      Similarity.knnIvfFixedPartitioned(s, path,
+      Similarity.knnIvfPartitioned(s, path,
         emb.where(col("vec_id") < 20), "vec_id", "embedding", k = 5,
-        centroids = cb, nprobe = 2)
+        nprobe = 2)
     }),
 
     // FILTERED ANN over the at-rest fixed-codebook layout: the layout
@@ -1539,17 +1546,9 @@ object SparkEntry {
     // fixed-codebook replay with the same corpus-side predicate
     "knn_ivf_filtered" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val cb = Similarity.fixedCodebook(nlist = 4, dims = 64)
-      val path = SparkEntry.ivfFilteredLayouts.getOrCompute(s, dir) {
-        val p = graft.TmpArtifacts.path("graft-ivf-filtered", dir)
-        Similarity.writeIvfFixed(emb, "vec_id", "embedding", p, cb,
-          extraCols = Seq("label"))
-        p
-      }
-      Similarity.knnIvfFixedPartitioned(s, path,
+      Similarity.knnIvfPartitioned(s, ivfFilteredLayout(s, dir, emb),
         emb.where(col("vec_id") < 20), "vec_id", "embedding", k = 5,
-        centroids = cb, nprobe = 2,
-        preFilter = Some(col("label") <= 4))
+        nprobe = 2, preFilter = Some(col("label") <= 4))
     }),
 
     // Deterministic negative sampling for contrastive training: 5
@@ -1571,17 +1570,15 @@ object SparkEntry {
     }),
 
     // IVF,SQ8 composed: cell pruning x int8 scoring x fp32 re-rank (the
-    // FAISS index as a dataflow). EXACT as of r17: cells come from the
-    // integer-exact k-means codebook (the knn_ivf promotion), and the
-    // int8/re-rank stages were already SQL-replayable (knn_int8_rerank /
-    // knn_ivf_sq8_fixed) — so the composed TRAINED tier now carries a
-    // full hash oracle; the float sampled-training knnIvfSq8 stays
-    // recall-pinned in SimilaritySpec.
+    // FAISS index as a dataflow). Cells come from the integer-exact
+    // k-means codebook (knn_ivf's), and the int8/re-rank stages replay
+    // in SQL (knn_int8_rerank / knn_ivf_sq8_fixed) — so the composed
+    // TRAINED tier carries a full hash oracle.
     "knn_ivf_sq8" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val cb = graft.operators.Embeddings.exactCentroidsFor(
         emb, "vec_id", "embedding", dim = 64, k = 16, iters = 2, key = dir)
-      Similarity.knnIvfSq8Exact(emb, emb.where(col("vec_id") < 20),
+      Similarity.knnIvfSq8(emb, emb.where(col("vec_id") < 20),
         "vec_id", "embedding", k = 5, centroids = cb, nprobe = 4,
         candidates = 25)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
@@ -1604,14 +1601,13 @@ object SparkEntry {
     // IVF,SQ8 over the FIXED literal codebook — the composed dataflow
     // (cell pruning × int8 scoring × fp32 re-rank) under ONE hash oracle;
     // each piece reuses a replay already proven green in isolation
-    // (knn_ivf_fixed / knn_int8_rerank / knn_brute). The learned
-    // knn_ivf_sq8 keeps its recall pin.
+    // (knn_ivf_fixed / knn_int8_rerank / knn_brute).
     "knn_ivf_sq8_fixed" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      Similarity.knnIvfSq8Fixed(emb, emb.where(col("vec_id") < 20),
+      Similarity.knnIvfSq8(emb, emb.where(col("vec_id") < 20),
         "vec_id", "embedding", k = 5,
         centroids = Similarity.fixedCodebook(nlist = 4, dims = 64),
-        candidates = 25)
+        nprobe = 2, candidates = 25)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"))
     }),
@@ -1622,31 +1618,30 @@ object SparkEntry {
     // so DuckDB re-derives the training bit-for-bit and replays
     // assign/probe/score/top-k end-to-end. Training cost per call: iters
     // scan-side assignment passes + k-row driver aggregates — bounded
-    // driver state at any corpus size. The float-trained knnIvf (sampled
-    // k-means++) remains the library's sampled-training scale path,
-    // recall-pinned in SimilaritySpec.
+    // driver state at any corpus size.
     "knn_ivf" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       // the codebook is a learned bounded artifact, memoized per dataset
       // (the languageProfilesFor treatment); probing stays per-query
       val cb = graft.operators.Embeddings.exactCentroidsFor(
         emb, "vec_id", "embedding", dim = 64, k = 16, iters = 2, key = dir)
-      Similarity.knnIvfExact(emb, emb.where(col("vec_id") < 20),
+      Similarity.knnIvf(emb, emb.where(col("vec_id") < 20),
         "vec_id", "embedding", k = 5, centroids = cb, nprobe = 4)
     }),
 
     // IVF over the PERSISTED at-rest layout — the pattern to copy at
     // corpus scale: the cell-partitioned corpus + integer-codebook
-    // parquet are built once per dataset (ivfExactLayoutFor caches per
-    // key) and every query pays only the partition-pruned probe-cell
-    // read. Pruning pinned by ScaleLayoutSpec; the SAME oracle as
-    // knn_ivf — a hash match proves the at-rest layout is invisible to
-    // queries (the knn_ivf_append contract, now on the TRAINED tier).
+    // parquet are built once per dataset (ivfLayoutFor memoizes per
+    // session and parameters, and reuses knn_ivf's memoized codebook)
+    // and every query pays only the partition-pruned probe-cell read.
+    // Pruning pinned by ScaleLayoutSpec; the SAME oracle as knn_ivf — a
+    // hash match proves the at-rest layout is invisible to queries (the
+    // knn_ivf_append contract, on the TRAINED codebook).
     "knn_ivf_at_rest" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val path = Similarity.ivfExactLayoutFor(emb, "vec_id", "embedding",
-        key = dir, dim = 64)
-      Similarity.knnIvfExactPartitioned(s, path,
+      val path = Similarity.ivfLayoutFor(emb, "vec_id", "embedding",
+        key = dir, dim = 64, nlist = 16, iters = 2)
+      Similarity.knnIvfPartitioned(s, path,
         emb.where(col("vec_id") < 20), "vec_id", "embedding", k = 5,
         nprobe = 4)
     }),
@@ -3729,13 +3724,11 @@ object SparkEntry {
           sum(col("mean_cost_q")).as("sum_mean_cost_q"))
     }),
 
-    // ---------- PQ/ADC similarity tier (rows-only: learned codebooks;
-    // recall vs brute force pinned in SimilaritySpec) ----------
+    // ---------- PQ/ADC similarity tier ----------
     // TRAINED PQ under a full hash oracle (r17): per-subspace sub-books
     // from the integer-exact k-means (slice-then-train — a pure function
     // of the data SQL re-derives), ADC by exact integer squared-L2,
-    // fp32 re-rank. The float sampled-training knnPqAdc/knnIvfPq stay as
-    // the scale paths, recall-pinned in SimilaritySpec.
+    // fp32 re-rank; recall vs brute force also pinned in SimilaritySpec.
     "knn_pq_adc" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val books = Similarity.exactPqBooksFor(emb, "vec_id", "embedding",
@@ -3768,7 +3761,7 @@ object SparkEntry {
     // level down): one-hot sub-books make encode (integer argmax per
     // subspace), the ADC LUT and the scan-side scoring all exact-integer
     // and SQL-replayable, so the PQ encode→LUT→ADC→top-k dataflow gets a
-    // full hash oracle; the learned tiers above keep their recall pins
+    // full hash oracle
     "knn_pq_adc_fixed" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.knnPqAdcFixed(emb, emb.where(col("vec_id") < 20),

@@ -662,7 +662,7 @@ private[graft] object SparkEntryOracles {
     * for all three trained-ANN oracles): each query's cells ranked by
     * squared-L2 against the trained centroids, ties to the smallest
     * cell, keeping `nprobe` — the exact twin of the engine's
-    * `Similarity.exactProbes`. `extra` forwards query-side columns. */
+    * `Similarity.ivfProbes`. `extra` forwards query-side columns. */
   private def probeRankSql(iqTable: String, centroidTable: String,
                            extra: String = "", nprobe: Int = 4): String = {
     val keepExtra = if (extra.isEmpty) "" else s", $extra"

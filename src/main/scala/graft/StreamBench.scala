@@ -47,7 +47,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    (flatMapGroupsWithState as-of buffers on BOTH streams; state ~
   *    keys × horizon)
   *  - `ivf_append` — [[streaming.EmbeddingStreams.ivfAppendIngest]]
-  *    (frozen-codebook cell assignment + partitioned append; cost ~
+  *    (cell assignment under the layout's persisted integer codebook +
+  *    partitioned append; cost ~
   *    batch, never corpus)
   *  - `gen_publish` — [[streaming.GenerationStreams.generationIngest]]
   *    (per-batch fold + atomic multi-table generation publish; state ~
@@ -329,12 +330,14 @@ object StreamBench {
       report("temporal_join", rows)
     }
 
-    // ---- ivf_append: frozen-codebook layout growth ----
+    // ---- ivf_append: layout growth under the persisted codebook ----
     if (wanted("ivf_append")) {
       val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
       val layout = freshDir(root, "ivf_layout")
       val seed = vecs.where(pmod(col("vec_id"), lit(2)) === 0)
-      operators.Similarity.writeIvf(seed, "vec_id", "embedding", layout)
+      operators.Similarity.writeIvf(seed, "vec_id", "embedding", layout,
+        operators.Embeddings.exactCentroids(seed, "vec_id", "embedding",
+          dim = 64, k = 16, iters = 2))
       val nSeed = seed.count()
       val srcDir = freshDir(root, "ivf_src")
       val arrivals = vecs.where(pmod(col("vec_id"), lit(2)) === 1)

@@ -978,8 +978,9 @@ object Dedup {
     * corpus and goes straight to within-cell pairing — the index that
     * similarity search maintains doubles as the dedup blocking, no
     * re-assignment scan. Blocked dedup is defined RELATIVE to its
-    * blocking: results follow the layout's (learned) cells, exactly as
-    * the registry form's follow the fixed codebook. */
+    * blocking: results follow the layout's cells (L2 argmin under its
+    * persisted integer codebook), exactly as the registry form's follow
+    * the fixed codebook. */
   def semanticDedupAtRest(spark: org.apache.spark.sql.SparkSession,
                           path: String, idCol: String, vecCol: String,
                           simSqPpm: Long = 810000L,

@@ -144,8 +144,8 @@ object Embeddings {
     * dot_long loop against a literal vector instead of `dim`
     * element_at-diff-square nodes — the k×dim-node tree version blew
     * past what whole-stage codegen compiles into tight code (measured
-    * 2x slower at k=4, dim=64). Shared with the trained-exact IVF tier
-    * ([[graft.operators.Similarity.knnIvfExact]]), whose cell assignment
+    * 2x slower at k=4, dim=64). Shared with the IVF tier
+    * ([[graft.operators.Similarity.knnIvf]]), whose cell assignment
     * must be the SAME rule the training loop optimized. */
   private[operators] def l2ArgminCell(q: Column,
                                       cents: Seq[Seq[Long]]): Column = {
@@ -190,7 +190,7 @@ object Embeddings {
 
   /** The trained integer codebook of [[kmeansExact]] as centroid rows —
     * the EXACT-arithmetic coarse quantizer the trained IVF tier
-    * ([[graft.operators.Similarity.knnIvfExact]]) searches under. Because
+    * ([[graft.operators.Similarity.knnIvf]]) searches under. Because
     * every training step is integer-exact and seed-free, the returned
     * codebook is a pure function of the data: a second engine (the DuckDB
     * oracle) re-derives it bit-for-bit, which is what promotes the
@@ -212,9 +212,11 @@ object Embeddings {
     * learned BOUNDED artifact (k×dim longs), so repeated queries against
     * the same corpus pay probe+scan, never a re-train. The caller's `key`
     * must identify the input dataset (e.g. its directory); the at-rest
-    * layout ([[Similarity.ivfExactLayoutFor]]) persists the same codebook
-    * for cross-JVM reuse. Training is deterministic, so memo-hit and
-    * fresh-train results are identical by construction (spec-pinned). */
+    * layout ([[Similarity.ivfLayoutFor]]) takes its codebook from this
+    * memo and persists it next to the cell-partitioned data, so an
+    * in-memory and an at-rest search of one corpus train once. Training
+    * is deterministic, so memo-hit and fresh-train results are identical
+    * by construction (spec-pinned). */
   def exactCentroidsFor(embs: DataFrame, idCol: String, vecCol: String,
                         dim: Int, k: Int = 16, iters: Int = 2,
                         key: String): Seq[Seq[Long]] =

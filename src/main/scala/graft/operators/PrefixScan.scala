@@ -282,11 +282,19 @@ object PrefixScan {
               emit(r, acc, tot)
             }
           }
+        /** One spill-capable buffer per partition, cleared for each
+          * interior segment: a buffer per segment would hold every
+          * spilled segment's sorter memory until the task ends, and a
+          * partition of many spilling segments could then not acquire
+          * memory. */
+        private val buf = new SpillableRowBuffer
         /** Interior segment: wholly inside this partition — buffer it
-          * (spill-capable) to learn its local total, then emit. */
+          * to learn its local total, then emit. The previous segment is
+          * fully drained before the next one starts, so clearing here
+          * never drops an unread row. */
         private def buffered(first: InternalRow,
                              g: UnsafeRow): Iterator[InternalRow] = {
-          val buf = new SpillableRowBuffer
+          buf.clear()
           var tot = valueAt(first)
           buf.add(first)
           var open = true

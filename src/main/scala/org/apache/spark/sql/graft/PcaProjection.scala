@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * components that is ~512 terms inside the Generate consume method,
   * which overflows janino's method budget and silently drops the whole
   * stage out of codegen. This expression is the repo's standard fix
-  * (see [[PqCodes]]): the r×d loading matrix ships as a referenced
+  * (see [[PqCodesLong]]): the r×d loading matrix ships as a referenced
   * object (kilobytes, driver-bounded like the Similarity codebooks) and
   * the generated code is a flat two-level loop that stays inside
   * whole-stage codegen no matter the dimensionality.

@@ -4,91 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
-
-/** Product-quantization encoder: all `m` subspace codes of a float vector
-  * in ONE codegen-called loop — `codes[j] = argmin_c ‖x̂_j − book_{j,c}‖²`
-  * over the unit-normalized row vector. The Column-expression formulation
-  * (per-subspace `greatest` over ksub structs) allocates m·ksub struct
-  * rows per input row for the comparisons — measured as the dominant cost
-  * of the PQ scan — where this is a flat float-array walk with zero
-  * per-candidate allocation.
-  *
-  * `books` is the flattened m × ksub × dsub codebook (kilobytes), shipped
-  * as a referenced object into the generated code.
-  */
-case class PqCodes(child: Expression, books: Array[Float],
-                   m: Int, ksub: Int, dsub: Int) extends UnaryExpression {
-
-  require(m > 0 && ksub > 0 && dsub > 0, "m, ksub, dsub must be positive")
-  require(books.length == m * ksub * dsub,
-    s"books length ${books.length} != m*ksub*dsub = ${m * ksub * dsub}")
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "pq_codes"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"pq_codes needs array<float>, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    PqCodes.compute(input.asInstanceOf[ArrayData], books, m, ksub, dsub)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = PqCodes.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val b = ctx.addReferenceObj("pqBooks", books, "float[]")
-    defineCodeGen(ctx, ev, a => s"$cls.compute($a, $b, $m, $ksub, $dsub)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqCodes =
-    copy(child = newChild)
-}
-
-object PqCodes {
-
-  /** Shared by interpreted eval and generated code. */
-  def compute(vec: ArrayData, books: Array[Float],
-              m: Int, ksub: Int, dsub: Int): ArrayData = {
-    val dims = m * dsub
-    val x = new Array[Double](dims)
-    val n = math.min(vec.numElements(), dims)
-    var i = 0
-    var ss = 0.0
-    while (i < n) {
-      val v = vec.getFloat(i)
-      x(i) = v
-      ss += v.toDouble * v
-      i += 1
-    }
-    val nrm = math.sqrt(ss)
-    val inv = if (nrm == 0.0) 1.0 else 1.0 / nrm
-    val out = new Array[Int](m)
-    var j = 0
-    while (j < m) {
-      val base = j * dsub
-      var best = 0
-      var bd = Double.MaxValue
-      var c = 0
-      while (c < ksub) {
-        var off = (j * ksub + c) * dsub
-        var s = 0.0
-        var d = 0
-        while (d < dsub) {
-          val diff = x(base + d) * inv - books(off)
-          s += diff * diff
-          d += 1; off += 1
-        }
-        if (s < bd) { bd = s; best = c }
-        c += 1
-      }
-      out(j) = best
-      j += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
-}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
 /** Integer PQ encoder for the TRAINED-exact tier (r17): all `m` subspace
   * codes of a milli-quantized long vector in one codegen-called loop —

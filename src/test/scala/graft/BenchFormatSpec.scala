@@ -132,4 +132,26 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(qmap.length + fams.length <= 1500,
       s"headline render too large: ${qmap.length + fams.length}")
   }
+
+  test("a section that cannot run reports \"skipped: <reason>\" as " +
+    "valid JSON, and two of them fit the tail budget") {
+    val reason = "IOException: \"quoted\" \\ path\nnext line " + "x" * 500
+    val ingest = Bench.skippedField("xml_ingest", reason)
+    val build = Bench.skippedField("ivf_layout_build_sec", reason)
+    assert(ingest.startsWith(""","xml_ingest":"skipped: IOException: """))
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree("{" + ingest.drop(1) + build + "}")
+    val text = parsed.get("xml_ingest").asText()
+    assert(text.startsWith("skipped: ") && text.length <= 89, text)
+    assert(parsed.get("ivf_layout_build_sec").asText() === text)
+    // the worst-case headline render plus both skipped sections still
+    // leaves room for the fixed summary fields in the 2000-char tail
+    val names = SparkEntry.queries.keys.toSeq.sortBy(-_.length).take(18)
+    val qmap = names.map(n => "\"" + n + "\":99.99").mkString("{", ",", "}")
+    val fams = SparkEntry.queries.keys.map(Bench.familyOf).toSet.toSeq.sorted
+      .map(f => "\"" + f + "\":999.99").mkString("{", ",", "}")
+    assert(qmap.length + fams.length + ingest.length + build.length <= 1750,
+      s"render too large: ${qmap.length + fams.length} + skipped " +
+        s"${ingest.length + build.length}")
+  }
 }

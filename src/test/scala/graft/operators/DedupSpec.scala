@@ -456,7 +456,9 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("semdedup-rest").toString
     Similarity.writeIvf(emb.where($"vec_id" % 2 === 0),
-      "vec_id", "embedding", dir)
+      "vec_id", "embedding", dir,
+      Embeddings.exactCentroids(emb, "vec_id", "embedding",
+        dim = 64, k = 16, iters = 2))
     Similarity.appendToIvf(emb.where($"vec_id" % 2 === 1),
       "vec_id", "embedding", dir)
     val got = Dedup

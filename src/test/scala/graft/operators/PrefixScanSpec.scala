@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class PrefixScanSpec extends SparkSpec {
@@ -85,5 +87,113 @@ class PrefixScanSpec extends SparkSpec {
       .take(8).toSeq
     assert(causes.exists(c => c.isInstanceOf[ArithmeticException] ||
       Option(c.getMessage).exists(_.toLowerCase.contains("overflow"))))
+  }
+
+  // ---- groupedRunningLong against its window oracle ----
+
+  /** Run `body` with session confs set, restoring the previous values. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val old = kv.map { case (k, _) => k -> conf.getOption(k) }
+    kv.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  /** Exactly `n` range partitions: AQE may not coalesce them. */
+  private def partitions(n: Int) = Seq(
+    "spark.sql.shuffle.partitions" -> n.toString,
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+
+  /** `sum(w) over (partition by g order by v)` and the per-group total —
+    * (g, v) is unique, so the default RANGE frame is the running sum. */
+  private def windowOracle(df: DataFrame): Set[(Long, Long, Long, Long, Long)] = {
+    import spark.implicits._
+    df.select($"g", $"v", $"w",
+      sum($"w").over(Window.partitionBy($"g").orderBy($"v")).as("cum"),
+      sum($"w").over(Window.partitionBy($"g")).as("tot"))
+      .as[(Long, Long, Long, Long, Long)].collect().toSet
+  }
+
+  /** The grouped scan's output, plus the number of partitions it ran in
+    * and how many of them group `g0` spans. */
+  private def scanned(df: DataFrame, g0: Long)
+      : (Set[(Long, Long, Long, Long, Long)], Int, Long) = {
+    import spark.implicits._
+    val out = PrefixScan.groupedRunningLong(df, Seq("g"), Seq("v"), "w")
+      .withColumn("_p", spark_partition_id()).cache()
+    val rows = out.select($"g", $"v", $"w", $"_cum", $"n")
+      .as[(Long, Long, Long, Long, Long)].collect().toSet
+    val span = out.where($"g" === g0).select($"_p").distinct().count()
+    val parts = out.rdd.getNumPartitions
+    out.unpersist()
+    (rows, parts, span)
+  }
+
+  /** Group 0 holds 3,000 rows; groups 1..199 hold 1..20 rows each.
+    * Weights are signed, and v is unique within a group. */
+  private def mixedGroups = {
+    import spark.implicits._
+    val big = (0L until 3000L).map(v => (0L, v, (v * 7919) % 101 - 50))
+    val small = (1L until 200L).flatMap { g =>
+      (0L until (g % 20) + 1).map(v => (g, v * 3 + g, (g * 31 + v) % 17 - 8))
+    }
+    (big ++ small).toDF("g", "v", "w").repartition(7)
+  }
+
+  test("groupedRunningLong equals the window oracle at forced partition " +
+    "counts 1..8, with a group spanning >= 3 partitions") {
+    val df = mixedGroups.cache()
+    val oracle = windowOracle(df)
+    (1 to 8).foreach { n =>
+      val (got, parts, span) = withConf(partitions(n): _*)(scanned(df, 0L))
+      assert(parts === n, s"forced $n partitions, ran in $parts")
+      if (n >= 4) assert(span >= 3, s"n=$n: group 0 spans only $span")
+      assert(got === oracle, s"n=$n: mismatch vs the window oracle")
+    }
+    df.unpersist()
+  }
+
+  test("groupedRunningLong: one giant group across every partition") {
+    import spark.implicits._
+    val df = (0L until 4000L).map(v => (7L, v * 2, v % 13 - 6))
+      .toDF("g", "v", "w").repartition(5).cache()
+    val oracle = windowOracle(df)
+    val (got, parts, span) = withConf(partitions(6): _*)(scanned(df, 7L))
+    assert(parts === 6 && span === 6L)
+    assert(got === oracle)
+    df.unpersist()
+  }
+
+  test("groupedRunningLong: interior groups spill from the row buffer at " +
+    "a low threshold and still equal the window oracle") {
+    import spark.implicits._
+    val df = (0L until 60L).flatMap(g =>
+        (0L until 40L).map(v => (g, v, (g + v) % 9 - 4)))
+      .toDF("g", "v", "w").repartition(3).cache()
+    val oracle = windowOracle(df)
+    val spilled = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => spilled.addAndGet(
+          m.memoryBytesSpilled + m.diskBytesSpilled))
+    }
+    val (got, _, _) = withConf(partitions(3) ++ Seq(
+        "spark.sql.windowExec.buffer.in.memory.threshold" -> "1",
+        "spark.sql.windowExec.buffer.spill.threshold" -> "2"): _*) {
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val r = scanned(df, 0L)
+        org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(spilled.get() > 0L, "the interior-segment buffer never spilled")
+    assert(got === oracle)
+    df.unpersist()
   }
 }

@@ -35,18 +35,21 @@ class ScaleLayoutSpec extends SparkSpec {
     import spark.implicits._
     val emb = Tables(spark, sfDir, "embeddings")
     val path = Files.createTempDirectory("ivf").toString + "/corpus"
-    Similarity.writeIvf(emb, "vec_id", "embedding", path)
+    val cb = Embeddings.exactCentroids(emb, "vec_id", "embedding",
+      dim = 64, k = 16, iters = 2)
+    Similarity.writeIvf(emb, "vec_id", "embedding", path, cb)
     val queries = emb.where($"vec_id" < 5)
 
     val fromLayout = Similarity.knnIvfPartitioned(spark, path, queries,
-      "vec_id", "embedding", k = 3)
+      "vec_id", "embedding", k = 3, nprobe = 4)
     val plan = fromLayout.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [cell"), plan)
 
-    val inMemory = Similarity.knnIvf(emb, queries, "vec_id", "embedding", k = 3)
-    val a = fromLayout.as[(Long, Long, Long)].collect().toSet
-    val b = inMemory.as[(Long, Long, Long)].collect().toSet
-    assert(a === b) // same seeded codebook -> identical neighbors
+    val inMemory = Similarity.knnIvf(emb, queries, "vec_id", "embedding",
+      k = 3, centroids = cb, nprobe = 4)
+    val a = fromLayout.as[(Long, Long, Long, Long)].collect().toSet
+    val b = inMemory.as[(Long, Long, Long, Long)].collect().toSet
+    assert(a === b) // the layout's persisted codebook -> identical neighbors
     assert(a.nonEmpty)
   }
 

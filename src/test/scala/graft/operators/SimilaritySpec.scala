@@ -54,12 +54,17 @@ class SimilaritySpec extends SparkSpec {
     assert(got.size <= truth.size) // never more than k per query
   }
 
+  /** The trained integer codebook of the registry's IVF queries. */
+  private lazy val trained = Embeddings.exactCentroids(emb, "vec_id",
+    "embedding", dim = 64, k = 16, iters = 2)
+
   test("IVF kNN: shape invariants hold and recall@3 beats the sign-bucket LSH") {
     import spark.implicits._
     val q = emb.where($"vec_id" < 50)
     val truth = Similarity.knnBruteForce(emb, q, "vec_id", "embedding", 3)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val ivf = Similarity.knnIvf(emb, q, "vec_id", "embedding", 3).cache()
+    val ivf = Similarity.knnIvf(emb, q, "vec_id", "embedding", 3,
+      centroids = trained, nprobe = 4).cache()
     // shape: <= k dense-ranked rows per query, no self matches
     assert(ivf.where($"query_id" === $"neighbor_id").count() === 0L)
     val badRank = ivf.groupBy("query_id")
@@ -69,50 +74,59 @@ class SimilaritySpec extends SparkSpec {
     val got = ivf.select("query_id", "neighbor_id")
       .as[(Long, Long)].collect().toSet
     val recall = got.intersect(truth).size.toDouble / truth.size
-    info(f"IVF recall@3 = $recall%.3f (nlist=16, nprobe=4 -> ~1/4 of corpus)")
+    val lsh = Similarity.knnBucketed(emb, q, "vec_id", "embedding", 3)
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+    val lshRecall = lsh.intersect(truth).size.toDouble / truth.size
+    info(f"IVF recall@3 = $recall%.3f (nlist=16, nprobe=4 -> ~1/4 of " +
+      f"corpus; sign-bucket LSH $lshRecall%.3f)")
     // data-adaptive cells hold a higher floor than the 0.3 the fixed
-    // hyperplane buckets are pinned to; deterministic (seeded k-means)
+    // hyperplane buckets are pinned to; deterministic (exact k-means)
+    assert(recall > lshRecall)
     assert(recall >= 0.5 && recall <= 1.0)
+  }
+
+  test("fixed codebook: the IVF L2 cell and probe rules equal the " +
+    "dot-product rules, and nlist must divide dims") {
+    import spark.implicits._
+    val cb = Similarity.fixedCodebook(nlist = 4, dims = 64)
+    // every fixed centroid has the same |c|², so L2 argmin == dot argmax
+    // with the same smallest-cell tie rule — on every corpus row
+    val cells = emb.select(
+      Similarity.cellOf($"embedding", cb).as("dot_cell"),
+      Embeddings.l2ArgminCell(Similarity.quantizeMilli($"embedding"), cb)
+        .as("l2_cell"))
+    assert(cells.where($"dot_cell" =!= $"l2_cell").count() === 0L)
+    assert(cells.select($"l2_cell").distinct().count() === 4L)
+    intercept[IllegalArgumentException] {
+      Similarity.fixedCodebook(nlist = 3, dims = 64)
+    }
   }
 
   test("codebook training is order-independent: clustered corpus order trains the same codebook") {
     import spark.implicits._
     // A corpus sorted so its leading rows are ONE cluster (ordered by
-    // label, the generator's cluster id) — the regression this pins:
-    // `limit`-based sampling would train the codebook on that shard alone.
+    // label, the generator's cluster id): a first-rows initialization
+    // would train the codebook on that shard alone. The exact k-means
+    // seeds from the smallest ids, whatever the arrival order.
     val clustered = emb.orderBy($"label", $"vec_id")
     val shuffled = emb.orderBy(xxhash64($"vec_id"))
-    val sampleCap = 200 // << corpus size, so the sampler actually selects
-    val a = Similarity.trainCodebook(clustered.select($"embedding"),
-      "embedding", nlist = 16, maxTrainVectors = sampleCap)
-    val b = Similarity.trainCodebook(shuffled.select($"embedding"),
-      "embedding", nlist = 16, maxTrainVectors = sampleCap)
-    // hash-membership sampling: identical training set either way, hence
-    // bit-identical centroids (same seed, same local k-means)
+    val a = Embeddings.exactCentroids(clustered, "vec_id", "embedding",
+      dim = 64, k = 16, iters = 2)
+    val b = Embeddings.exactCentroids(shuffled, "vec_id", "embedding",
+      dim = 64, k = 16, iters = 2)
     assert(a === b)
+    assert(a === trained)
     // and recall through the full IVF path holds the pinned floor even
     // when the corpus arrives clustered
     val q = emb.where($"vec_id" < 50)
     val truth = Similarity.knnBruteForce(emb, q, "vec_id", "embedding", 3)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val got = Similarity.knnIvf(clustered, q, "vec_id", "embedding", 3,
-        maxTrainVectors = sampleCap)
+        centroids = a, nprobe = 4)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = got.intersect(truth).size.toDouble / truth.size
-    info(f"clustered-order IVF recall@3 = $recall%.3f (train sample = $sampleCap)")
+    info(f"clustered-order IVF recall@3 = $recall%.3f")
     assert(recall >= 0.5 && recall <= 1.0)
-  }
-
-  test("IVF survives zero-norm vectors (no cosine k-means crash, never a neighbor)") {
-    import spark.implicits._
-    val dims = emb.select(size($"embedding")).first().getInt(0)
-    val zero = Seq((99999L, Seq.fill(dims)(0.0f), 0))
-      .toDF("vec_id", "embedding", "label")
-    val withZero = emb.unionByName(zero)
-    val q = withZero.where($"vec_id" < 5)
-    val knn = Similarity.knnIvf(withZero, q, "vec_id", "embedding", 3)
-    assert(knn.where($"neighbor_id" === 99999L).count() === 0L)
-    assert(knn.count() > 0L)
   }
 
   test("incremental IVF append: frozen codebook, no existing file touched, " +
@@ -123,7 +137,10 @@ class SimilaritySpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-ivf-append").toString
     val grown = s"$dir/grown"; val rebuilt = s"$dir/rebuilt"
-    Similarity.writeIvf(base, "vec_id", "embedding", grown)
+    Similarity.writeIvf(base, "vec_id", "embedding", grown,
+      Embeddings.exactCentroids(base, "vec_id", "embedding",
+        dim = 64, k = 16, iters = 2),
+      extraCols = Seq("label"))
 
     def dataFiles(p: String): Map[String, (Long, Long)] = {
       val root = new java.io.File(s"$p/data")
@@ -141,24 +158,28 @@ class SimilaritySpec extends SparkSpec {
     before.foreach { case (f, sig) =>
       assert(after.get(f).contains(sig), s"existing file rewritten: $f") }
     assert(after.size > before.size, "append added no files")
+    // the appended rows carry the layout's extra column
+    val grownRows = spark.read.parquet(s"$grown/data")
+    assert(grownRows.count() === emb.count())
+    assert(grownRows.where($"label".isNull).count() === 0L)
 
     // equivalence: the appended layout answers queries EXACTLY like a
     // full rebuild of the grown corpus under the same frozen codebook —
     // a re-train is the only event that may change results
     val codebook = Similarity.readIvfCodebook(spark, grown)
     Similarity.writeIvf(base.unionByName(batch), "vec_id", "embedding",
-      rebuilt, codebook = Some(codebook))
+      rebuilt, codebook)
     val q = emb.where($"vec_id" < 30)
     def top(p: String) = Similarity
-      .knnIvfPartitioned(spark, p, q, "vec_id", "embedding", 5)
-      .as[(Long, Int, Long)].collect().toSet
+      .knnIvfPartitioned(spark, p, q, "vec_id", "embedding", 5, nprobe = 4)
+      .as[(Long, Long, Long, Long)].collect().toSet
     assert(top(grown) === top(rebuilt))
 
     // and recall over the grown corpus holds the IVF tier's pinned floor
     val truth = Similarity.knnBruteForce(base.unionByName(batch), q,
         "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val got = top(grown).map(t => (t._1, t._3))
+    val got = top(grown).map(t => (t._1, t._2))
     val recall = got.intersect(truth).size.toDouble / truth.size
     info(f"grown-layout IVF recall@5 = $recall%.3f")
     assert(recall >= 0.5 && recall <= 1.0)
@@ -169,8 +190,7 @@ class SimilaritySpec extends SparkSpec {
     "answers identically to the in-memory form with pruned partitions, " +
     "and probe-all equals the integer brute force") {
     import spark.implicits._
-    val cb = Embeddings.exactCentroids(emb, "vec_id", "embedding",
-      dim = 64, k = 16, iters = 2)
+    val cb = trained
     assert(cb.size === 16 && cb.forall(_.size === 64))
     // the per-dataset memo hands back the identical codebook (training
     // is deterministic, so memo-hit == fresh-train by construction)
@@ -180,15 +200,15 @@ class SimilaritySpec extends SparkSpec {
       dim = 64, k = 16, iters = 2, key = "spec-ivf-exact") === cb)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-ivf-exact-spec").toString + "/layout"
-    Similarity.writeIvfExact(emb, "vec_id", "embedding", dir, cb)
+    Similarity.writeIvf(emb, "vec_id", "embedding", dir, cb)
     // trained == exact-arith codebook: what the layout persisted is
     // bit-identical to a fresh training run (pure function of the data)
-    assert(Similarity.readIvfExactCodebook(spark, dir) === cb)
+    assert(Similarity.readIvfCodebook(spark, dir) === cb)
     val q = emb.where($"vec_id" < 20)
-    val inMem = Similarity.knnIvfExact(emb, q, "vec_id", "embedding",
+    val inMem = Similarity.knnIvf(emb, q, "vec_id", "embedding",
       k = 5, centroids = cb, nprobe = 4)
       .as[(Long, Long, Long, Long)].collect().toSet
-    val atRest = Similarity.knnIvfExactPartitioned(spark, dir, q,
+    val atRest = Similarity.knnIvfPartitioned(spark, dir, q,
       "vec_id", "embedding", k = 5, nprobe = 4)
     val plan = atRest.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [cell"),
@@ -198,7 +218,7 @@ class SimilaritySpec extends SparkSpec {
     // probing EVERY cell is the exact integer-dot brute force (each
     // corpus vector lives in exactly one cell) — measure recall@5 of the
     // operating nprobe=4 against it and pin the floor
-    val truth = Similarity.knnIvfExact(emb, q, "vec_id", "embedding",
+    val truth = Similarity.knnIvf(emb, q, "vec_id", "embedding",
       k = 5, centroids = cb, nprobe = 16)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val got = inMem.map(t => (t._1, t._2))
@@ -207,16 +227,35 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.5 && recall <= 1.0)
   }
 
+  test("ivfLayoutFor memoizes per (key, dim, nlist, iters): one key at " +
+    "nlist 16 then 8 persists 16- and 8-cell codebooks, trained once") {
+    val key = "spec-ivf-layout-memo"
+    val p16 = Similarity.ivfLayoutFor(emb, "vec_id", "embedding", key,
+      dim = 64, nlist = 16, iters = 2)
+    val p8 = Similarity.ivfLayoutFor(emb, "vec_id", "embedding", key,
+      dim = 64, nlist = 8, iters = 2)
+    assert(p16 !== p8)
+    assert(Similarity.readIvfCodebook(spark, p16).size === 16)
+    assert(Similarity.readIvfCodebook(spark, p8).size === 8)
+    // the layout's codebook is the memoized one the in-memory tier uses
+    assert(Similarity.readIvfCodebook(spark, p16) ===
+      Embeddings.exactCentroidsFor(emb, "vec_id", "embedding", dim = 64,
+        k = 16, iters = 2, key = key))
+    // a repeat call is a memo hit: same path, the layout is not rewritten
+    val stamp = new java.io.File(s"$p16/centroids").lastModified
+    assert(Similarity.ivfLayoutFor(emb, "vec_id", "embedding", key,
+      dim = 64, nlist = 16, iters = 2) === p16)
+    assert(new java.io.File(s"$p16/centroids").lastModified === stamp)
+  }
+
   test("trained-exact IVF,SQ8: int8 cut + fp32 re-rank over exact-kmeans " +
     "cells recalls the brute-force top-k") {
     import spark.implicits._
-    val cb = Embeddings.exactCentroids(emb, "vec_id", "embedding",
-      dim = 64, k = 16, iters = 2)
     val q = emb.where($"vec_id" < 20)
     val truth = Similarity.knnBruteForce(emb, q, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val got = Similarity.knnIvfSq8Exact(emb, q, "vec_id", "embedding",
-      k = 5, centroids = cb, nprobe = 4, candidates = 25)
+    val got = Similarity.knnIvfSq8(emb, q, "vec_id", "embedding",
+      k = 5, centroids = trained, nprobe = 4, candidates = 25)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = got.intersect(truth).size.toDouble / truth.size
     info(f"trained-exact IVF,SQ8 recall@5 = $recall%.3f")
@@ -261,15 +300,16 @@ class SimilaritySpec extends SparkSpec {
       .createTempDirectory("graft-ivf-compact").toString
     val p = s"$dir/layout"
     Similarity.writeIvf(emb.where($"vec_id" % 3 === 0),
-      "vec_id", "embedding", p)
+      "vec_id", "embedding", p, trained)
     Similarity.appendToIvf(emb.where($"vec_id" % 3 === 1),
       "vec_id", "embedding", p)
     Similarity.appendToIvf(emb.where($"vec_id" % 3 === 2),
       "vec_id", "embedding", p)
     val queries = emb.where($"vec_id" < 30)
     def top() = Similarity
-      .knnIvfPartitioned(spark, p, queries, "vec_id", "embedding", 5)
-      .as[(Long, Int, Long)].collect().toSet
+      .knnIvfPartitioned(spark, p, queries, "vec_id", "embedding", 5,
+        nprobe = 4)
+      .as[(Long, Long, Long, Long)].collect().toSet
     def parquetFiles(): Int = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
@@ -367,10 +407,12 @@ class SimilaritySpec extends SparkSpec {
     val q = emb.where($"vec_id" < 20)
     val truth = Similarity.knnBruteForce(emb, q, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val ivfOnly = Similarity.knnIvf(emb, q, "vec_id", "embedding", 5)
+    val ivfOnly = Similarity.knnIvf(emb, q, "vec_id", "embedding", 5,
+        centroids = trained, nprobe = 4)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val run = () => Similarity
-      .knnIvfSq8(emb, q, "vec_id", "embedding", 5, candidates = 25)
+      .knnIvfSq8(emb, q, "vec_id", "embedding", 5, centroids = trained,
+        nprobe = 4, candidates = 25)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val got = run()
     val recall = got.intersect(truth).size.toDouble / truth.size
@@ -406,8 +448,10 @@ class SimilaritySpec extends SparkSpec {
     val q = emb.where($"vec_id" < 20)
     val truth = Similarity.knnBruteForce(emb, q, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val run = () => Similarity
-      .knnPqAdc(emb, q, "vec_id", "embedding", 5, candidates = 50)
+    val books = Similarity.exactPqBooksFor(emb, "vec_id", "embedding",
+      dim = 64, m = 16, ksub = 16, key = "spec-pq-exact")
+    val run = () => Similarity.knnPqAdcExact(emb, q, "vec_id", "embedding",
+      5, books = books, dim = 64, candidates = 50)
     val pq = run().cache()
     assert(pq.where($"query_id" === $"neighbor_id").count() === 0L)
     val badRank = pq.groupBy("query_id")
@@ -418,11 +462,9 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     val recall = got.intersect(truth).size.toDouble / truth.size
     info(f"PQ/ADC recall@5 = $recall%.3f (m=16 subspaces x 16 centroids," +
-      " 16-byte codes, 10x-k candidate re-rank)")
-    // 16-byte codes are a 16x compression of the 64-dim fp32 vectors; with
-    // a 10x candidate cut the fp32 re-rank must still recover most true
-    // neighbors — pinned floor (measured 0.91; m=8 measured 0.69),
-    // deterministic seeded training
+      " 16-code vectors, 10x-k candidate re-rank)")
+    // a 10x candidate cut re-ranked in fp32 must recover most true
+    // neighbors; deterministic exact training
     assert(recall >= 0.7 && recall <= 1.0)
     assert(got === run().select("query_id", "neighbor_id")
       .as[(Long, Long)].collect().toSet) // deterministic
@@ -433,16 +475,23 @@ class SimilaritySpec extends SparkSpec {
     val q = emb.where($"vec_id" < 20)
     val truth = Similarity.knnBruteForce(emb, q, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val run = () => Similarity
-      .knnIvfPq(emb, q, "vec_id", "embedding", 5)
-    val got = run().select("query_id", "neighbor_id")
+    val books = Similarity.exactPqBooksFor(emb, "vec_id", "embedding",
+      dim = 64, m = 16, ksub = 16, key = "spec-pq-exact")
+    val run = () => Similarity.knnIvfPqExact(emb, q, "vec_id", "embedding",
+      5, coarse = trained, books = books, dim = 64, nprobe = 4,
+      candidates = 25)
+    val ivfPq = run().cache()
+    assert(ivfPq.where($"query_id" === $"neighbor_id").count() === 0L)
+    val badRank = ivfPq.groupBy("query_id")
+      .agg(count(lit(1)).as("n"), max("rank").as("hi"))
+      .where($"hi" =!= $"n" || $"n" > 5).count()
+    assert(badRank === 0L)
+    val got = ivfPq.select("query_id", "neighbor_id")
       .as[(Long, Long)].collect().toSet
     val recall = got.intersect(truth).size.toDouble / truth.size
     info(f"IVF,PQ recall@5 = $recall%.3f (nprobe/nlist = 1/4 of cells x" +
-      " 16-byte codes x fp32 re-rank)")
-    // bounded below by what the IVF cell pruning admits (the PQ+re-rank
-    // tier is near-lossless on the admitted candidates — see the pure-PQ
-    // pin at 0.91 and SQ8's at-parity result)
+      " 16-code vectors x fp32 re-rank)")
+    // bounded below by what the IVF cell pruning admits
     assert(recall >= 0.5 && recall <= 1.0)
     assert(got === run().select("query_id", "neighbor_id")
       .as[(Long, Long)].collect().toSet) // deterministic
@@ -450,19 +499,20 @@ class SimilaritySpec extends SparkSpec {
 
   test("PQ codes: codegen'd loop == struct-greatest reference, bounded, spread") {
     import spark.implicits._
-    val books = Similarity.trainPqCodebooks(emb.select($"embedding"),
-      "embedding", m = 8, ksub = 16)
+    val books = Similarity.exactPqBooksFor(emb, "vec_id", "embedding",
+      dim = 64, m = 8, ksub = 16, key = "spec-pq-codes")
     assert(books.length === 8)
     assert(books.forall(_.length === 16))
+    val iq = Similarity.quantizeMilli($"embedding")
     val coded = emb
-      .withColumn("_nrm", Similarity.vecNorm($"embedding", 64))
       .select(
-        Similarity.pqCodes($"embedding", books).as("fast") +:
+        Similarity.pqCodesLong(iq, books, dsub = 8).as("fast") +:
           (0 until 8).map(j =>
-            Similarity.pqCode($"embedding", $"_nrm", books, j).as(s"c$j")): _*)
+            Embeddings.l2ArgminCell(slice(iq, j * 8 + 1, 8), books(j))
+              .as(s"c$j")): _*)
       .cache()
-    // the one-loop expression and the per-subspace struct-greatest
-    // formulation must agree code-for-code
+    // the one-loop expression and the per-subspace struct-least L2
+    // argmin (the exact k-means' own assignment rule) agree code-for-code
     val mismatch = coded.where(
       (0 until 8).map(j => element_at($"fast", j + 1) =!= col(s"c$j"))
         .reduce(_ || _)).count()
@@ -482,15 +532,15 @@ class SimilaritySpec extends SparkSpec {
     import spark.implicits._
     val cb = Similarity.fixedCodebook(nlist = 4, dims = 64)
     val path = graft.TmpArtifacts.path("graft-ivf-filtered-spec", sfDir)
-    Similarity.writeIvfFixed(emb, "vec_id", "embedding", path, cb,
+    Similarity.writeIvf(emb, "vec_id", "embedding", path, cb,
       extraCols = Seq("label"))
     val q = emb.where($"vec_id" < 20)
-    val got = Similarity.knnIvfFixedPartitioned(spark, path, q,
-      "vec_id", "embedding", k = 5, centroids = cb, nprobe = 2,
+    val got = Similarity.knnIvfPartitioned(spark, path, q,
+      "vec_id", "embedding", k = 5, nprobe = 2,
       preFilter = Some($"label" <= 4)).cache()
-    // semantics: identical to the in-memory fixed tier over the
-    // label-filtered corpus (probes stay unfiltered on both sides)
-    val twin = Similarity.knnIvfFixed(emb.where($"label" <= 4), q,
+    // semantics: identical to the in-memory tier over the label-filtered
+    // corpus (probes stay unfiltered on both sides)
+    val twin = Similarity.knnIvf(emb.where($"label" <= 4), q,
       "vec_id", "embedding", k = 5, centroids = cb, nprobe = 2)
     assert(got.collect().toSet === twin.collect().toSet)
     // no neighbor escapes the predicate
@@ -569,7 +619,7 @@ class SimilaritySpec extends SparkSpec {
     assert(!loose.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
-  test("knnRadiusFixedPartitioned: pruned result is contained in the " +
+  test("knnRadiusPartitioned: pruned result is contained in the " +
     "full-scan radius result, and probe-2 finds the fixture's neighbors") {
     import spark.implicits._
     val emb = graft.Tables(spark, sfDir, "embeddings")
@@ -580,9 +630,9 @@ class SimilaritySpec extends SparkSpec {
     val cb = Similarity.fixedCodebook(nlist = 4, dims = 64)
     val path = java.nio.file.Files
       .createTempDirectory("radius-ivf").toString
-    Similarity.writeIvfFixed(emb, "vec_id", "embedding", path, cb)
-    val pruned = Similarity.knnRadiusFixedPartitioned(spark, path,
-      queries, "vec_id", "embedding", centroids = cb, nprobe = 2,
+    Similarity.writeIvf(emb, "vec_id", "embedding", path, cb)
+    val pruned = Similarity.knnRadiusPartitioned(spark, path,
+      queries, "vec_id", "embedding", nprobe = 2,
       simSqPpm = 160000L)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(pruned.subsetOf(full),
@@ -590,13 +640,13 @@ class SimilaritySpec extends SparkSpec {
     assert(pruned.nonEmpty, "fixture corpus has in-ball neighbors")
     // the at-rest scan must actually prune: PartitionFilters carries the
     // probe-cell predicate (same pin as the IVF top-k layouts)
-    val plan = Similarity.knnRadiusFixedPartitioned(spark, path,
-      queries, "vec_id", "embedding", centroids = cb, nprobe = 2,
+    val plan = Similarity.knnRadiusPartitioned(spark, path,
+      queries, "vec_id", "embedding", nprobe = 2,
       simSqPpm = 160000L).queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [cell"), plan)
     // probing ALL cells removes the prune: equality with the full scan
-    val all = Similarity.knnRadiusFixedPartitioned(spark, path,
-      queries, "vec_id", "embedding", centroids = cb, nprobe = 4,
+    val all = Similarity.knnRadiusPartitioned(spark, path,
+      queries, "vec_id", "embedding", nprobe = 4,
       simSqPpm = 160000L)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(all === full)

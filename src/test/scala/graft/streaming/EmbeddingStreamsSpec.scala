@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.{SparkSpec, Tables}
-import graft.operators.Similarity
+import graft.operators.{Embeddings, Similarity}
 
 class EmbeddingStreamsSpec extends SparkSpec {
 
@@ -19,7 +19,9 @@ class EmbeddingStreamsSpec extends SparkSpec {
     val arriving = emb.where($"vec_id" % 3 =!= 0)
     val tmp = Files.createTempDirectory("ivf-stream").toString
     val grown = s"$tmp/grown"; val rebuilt = s"$tmp/rebuilt"
-    Similarity.writeIvf(base, "vec_id", "embedding", grown)
+    Similarity.writeIvf(base, "vec_id", "embedding", grown,
+      Embeddings.exactCentroids(base, "vec_id", "embedding",
+        dim = 64, k = 16, iters = 2))
 
     // two separate micro-batches prove per-batch (not one-shot) growth
     val rows = arriving.as[(Long, Array[Float], Int)].collect()
@@ -36,19 +38,20 @@ class EmbeddingStreamsSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
 
-    // every arriving non-zero vector landed exactly once
+    // every arriving vector landed exactly once
     val grownRows = spark.read.parquet(s"$grown/data")
+    assert(grownRows.count() === emb.count())
     assert(grownRows.select("vec_id").distinct().count()
       === grownRows.count()) // at-least-once did not double-append here
     // streamed-grown layout answers exactly like a full rebuild under
     // the same frozen codebook — growth is invisible to queries
     val codebook = Similarity.readIvfCodebook(spark, grown)
-    Similarity.writeIvf(emb, "vec_id", "embedding", rebuilt,
-      codebook = Some(codebook))
+    Similarity.writeIvf(emb, "vec_id", "embedding", rebuilt, codebook)
     val queries = emb.where($"vec_id" < 30)
     def top(p: String) = Similarity
-      .knnIvfPartitioned(spark, p, queries, "vec_id", "embedding", 5)
-      .as[(Long, Int, Long)].collect().toSet
+      .knnIvfPartitioned(spark, p, queries, "vec_id", "embedding", 5,
+        nprobe = 4)
+      .as[(Long, Long, Long, Long)].collect().toSet
     assert(top(grown) === top(rebuilt))
   }
 }
