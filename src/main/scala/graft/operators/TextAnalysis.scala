@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
 import graft.Checkpoints.PinOps
+import graft.Observed
 
 /** Text-corpus analysis operators: language identification (marker-word
   * heuristic), quality scoring, token counting, and content fingerprinting.
@@ -389,9 +390,10 @@ object TextAnalysis {
       // boilerplate, so the planner (AQE) picks broadcast only while it
       // actually fits — the Dedup.ngramJaccardPairsFromGroups treatment
       val ex = exploded(refDocs).pin()
-      // observed df-cap drop, same contract as winnowPairs' metric
-      val hot = ex.groupBy("f").agg(count(lit(1)).as("df"))
-        .observe("winnow_ref_df_cap",
+      // observed df-cap drop, same contract (and the same build-time
+      // delivery under the memoized pin) as winnowPairs' metric
+      val hot = Observed.observe(
+          ex.groupBy("f").agg(count(lit(1)).as("df")), "winnow_ref_df_cap",
           sum(when(col("df") > maxDf, 1L).otherwise(0L))
             .as("dropped_fingerprints"),
           sum(when(col("df") > maxDf, col("df")).otherwise(0L))
@@ -556,8 +558,10 @@ object TextAnalysis {
     // before any task has updated the aggregation (metric reads 0). The
     // eager pin materializes the winnow kernel + df aggregate at call
     // time and delivers the metric exactly once, on this execution.
-    val hot = grouped
-      .observe(metric,
+    // The pin runs the observe job at build time and cuts CollectMetrics
+    // from the returned plan, so the metric reaches Observed.run callers
+    // through Observed.observe's build-scoped Observation.
+    val hot = Observed.observe(grouped, metric,
         sum(when(col("df") > cap, 1L).otherwise(0L))
           .as("dropped_fingerprints"),
         sum(when(col("df") > cap, col("df")).otherwise(0L))
