@@ -254,22 +254,10 @@ object GraftFunctions {
   /** Word k-shingles: overlapping k-grams of the token stream, the unit of
     * MinHash / Jaccard document similarity. Empty array when < k tokens.
     * Codegen-called primitive loop ([[org.apache.spark.sql.graft.Shingles]]);
-    * equivalence with the declarative HOF form is property-pinned via
-    * [[shinglesHof]]. */
+    * equivalence with the declarative HOF form is property-pinned in
+    * `GraftFunctionsSpec`. */
   def shingles(c: Column, k: Int): Column =
     GraftBridge.column(Shingles(GraftBridge.expression(tokens(c)), k))
-
-  /** The higher-order-function formulation of [[shingles]] — interpreted
-    * and allocation-heavy (a slice array per position), kept as the
-    * readable spec the codegen'd expression is tested against. */
-  def shinglesHof(c: Column, k: Int): Column = {
-    val toks = tokens(c)
-    when(size(toks) >= k,
-      transform(
-        sequence(lit(0), size(toks) - lit(k)),
-        i => array_join(slice(toks, i + lit(1), lit(k)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
 
   /** Distinct word-k-shingle HASHES: like [[shingles]] but each k-gram is
     * a 64-bit hash instead of a joined string — no per-shingle string
@@ -326,17 +314,6 @@ object GraftFunctions {
   def minhashSignature(shingleCol: Column, n: Int): Column =
     GraftBridge.column(
       MinHashSignature(GraftBridge.expression(shingleCol), n))
-
-  /** Interpreted HOF formulation of [[minhashSignature]], shingle-major so
-    * projection collapsing can't multiply the shingle computation — kept as
-    * the cross-check twin for the custom expression (pinned equal by test).
-    */
-  def minhashSignatureHof(shingleCol: Column, n: Int): Column =
-    aggregate(shingleCol,
-      array_repeat(lit(Long.MaxValue), n),
-      (acc, s) => zip_with(acc,
-        transform(sequence(lit(0), lit(n - 1)), seed => xxhash64(seed, s)),
-        (a, b) => least(a, b)))
 
   /** LSH band hashes: split an n-hash signature into `bands` bands of
     * n/bands rows each; two documents collide in a band iff that slice of

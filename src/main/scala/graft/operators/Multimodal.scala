@@ -379,8 +379,11 @@ object Multimodal {
       ((seed * 59 + f * 23) % 256).toInt,
       ((seed * 83 + f * 43) % 256).toInt)
 
-  private def syntheticAvi(seed: Long, nFrames: Int, w: Int, h: Int,
-                           fmt: String): Array[Byte] = {
+  /** Synthetic AVI of `nFrames` solid-color frames in ImageIO format
+    * `fmt`: "png" is [[syntheticPngAvi]]; specs also build the lossy
+    * "jpg" variant, which has no SQL twin. */
+  private[graft] def syntheticAvi(seed: Long, nFrames: Int, w: Int, h: Int,
+                                  fmt: String): Array[Byte] = {
     val frames = (0 until nFrames).map { f =>
       val img = new java.awt.image.BufferedImage(w, h,
         java.awt.image.BufferedImage.TYPE_INT_RGB)
@@ -398,14 +401,6 @@ object Multimodal {
     }
     buildMjpegAvi(frames, w, h)
   }
-
-  /** Deterministic synthetic MJPEG-AVI: `nFrames` solid-color JPEG frames
-    * whose RGB derives from (seed, frame index) — the payload generator
-    * for specs (real container, real JPEG encode, real decode on the
-    * read side). JPEG is lossy and codec-specific, so THIS variant has
-    * no SQL twin — the registry query uses [[syntheticPngAvi]]. */
-  def syntheticMjpegAvi(seed: Long, nFrames: Int, w: Int, h: Int): Array[Byte] =
-    syntheticAvi(seed, nFrames, w, h, "jpg")
 
   /** Deterministic synthetic MPNG-AVI: the same container and color
     * formula with LOSSLESS PNG frames (the real `MPNG` codec layout —
@@ -582,7 +577,7 @@ object Multimodal {
 
   /** 16-bit mono PCM WAV container around `nSamples` generated samples —
     * the shared writer of every audio fixture builder. */
-  private def monoWavBytes(nSamples: Int, sampleRate: Int)(
+  private[graft] def monoWavBytes(nSamples: Int, sampleRate: Int)(
       sample: Int => Int): Array[Byte] = {
     val dataLen = nSamples * 2
     val bos = new java.io.ByteArrayOutputStream()
@@ -600,15 +595,6 @@ object Multimodal {
     while (i < nSamples) { w16(sample(i)); i += 1 }
     bos.toByteArray
   }
-
-  /** Deterministic synthetic 16-bit mono WAV: a pure sine at `freqHz`,
-    * amplitude `amp` (of 32767), `nSamples` samples at `sampleRate` Hz —
-    * the executor-side audio fixture (StrictMath.sin: bit-identical on
-    * every JVM). */
-  def buildSineWav(freqHz: Double, sampleRate: Int = 8000,
-                   nSamples: Int = 2000, amp: Int = 12000): Array[Byte] =
-    monoWavBytes(nSamples, sampleRate)(i => math.round(
-      amp * StrictMath.sin(2.0 * math.Pi * freqHz * i / sampleRate)).toInt)
 
   /** Deterministic 16-bit mono WAV whose samples come from the SAME
     * milli-quantized sine table the spectrum probe uses: a tone at band

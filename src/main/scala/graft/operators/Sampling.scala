@@ -510,20 +510,10 @@ object Sampling {
     * after runs on the group-sized table under the constant-partition
     * window idiom. */
   def mixGap(df: DataFrame, groupCol: String,
-             nTokensCol: String): DataFrame =
-    mixGapFromGroups(
-      df.groupBy(col(groupCol))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col(nTokensCol)).as("sum_tokens")),
-      groupCol)
-
-  /** [[mixGap]] over an ALREADY-aggregated group table (`groupCol`,
-    * `n_docs`, `sum_tokens`) — the seam the streaming monitor uses to
-    * recompute the report from its maintained state without re-scanning
-    * any corpus. */
-  def mixGapFromGroups(groups: DataFrame, groupCol: String): DataFrame = {
-    groups
-      .select(col(groupCol), col("n_docs"), col("sum_tokens"))
+             nTokensCol: String): DataFrame = {
+    df.groupBy(col(groupCol))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col(nTokensCol)).as("sum_tokens"))
       .withColumn("w_q",
         floor(sqrt(col("n_docs").cast("double")) * lit(1e6)).cast("long"))
       // decimal(38,0): token-mass·10⁶ overflows int64 past ~9·10¹²

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -102,6 +103,28 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(fp(1)._1 === fp(3)._1) // md5 over NORMALIZED text: punctuation/case collapse
     assert(fp(1)._2 !== fp(2)._2) // rolling hash: token order matters
   }
+
+  /** The higher-order-function formulation of [[GraftFunctions.shingles]]
+    * — interpreted and allocation-heavy (a slice array per position), the
+    * readable spec the codegen'd expression is tested against. */
+  private def shinglesHof(c: Column, k: Int): Column = {
+    val toks = tokens(c)
+    when(size(toks) >= k,
+      transform(
+        sequence(lit(0), size(toks) - lit(k)),
+        i => array_join(slice(toks, i + lit(1), lit(k)), " ")))
+      .otherwise(array().cast("array<string>"))
+  }
+
+  /** Interpreted HOF formulation of [[GraftFunctions.minhashSignature]],
+    * shingle-major so projection collapsing can't multiply the shingle
+    * computation — the cross-check twin for the custom expression. */
+  private def minhashSignatureHof(shingleCol: Column, n: Int): Column =
+    aggregate(shingleCol,
+      array_repeat(lit(Long.MaxValue), n),
+      (acc, s) => zip_with(acc,
+        transform(sequence(lit(0), lit(n - 1)), seed => xxhash64(seed, s)),
+        (a, b) => least(a, b)))
 
   test("codegen'd MinHashSignature expression == interpreted HOF formulation") {
     import spark.implicits._

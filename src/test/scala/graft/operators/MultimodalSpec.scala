@@ -6,6 +6,15 @@ import graft.SparkSpec
 
 class MultimodalSpec extends SparkSpec {
 
+  /** Deterministic synthetic 16-bit mono WAV: a pure sine at `freqHz`,
+    * amplitude `amp` (of 32767), `nSamples` samples at `sampleRate` Hz
+    * (StrictMath.sin: bit-identical on every JVM). */
+  private def buildSineWav(freqHz: Double, sampleRate: Int = 8000,
+                           nSamples: Int = 2000,
+                           amp: Int = 12000): Array[Byte] =
+    Multimodal.monoWavBytes(nSamples, sampleRate)(i => math.round(
+      amp * StrictMath.sin(2.0 * math.Pi * freqHz * i / sampleRate)).toInt)
+
   private lazy val assets = graft.Tables(spark, sfDir, "documents")
     .select(col("doc_id"), col("text").cast("binary").as("payload"))
     .cache()
@@ -160,7 +169,8 @@ class MultimodalSpec extends SparkSpec {
   test("MJPEG-AVI: RIFF walk finds every frame chunk, sampled frames decode to true dims and colors") {
     import spark.implicits._
     // 7-frame AVI of 16x12 solid-color JPEGs; decode 3 evenly spaced
-    val avi = Multimodal.syntheticMjpegAvi(seed = 5L, nFrames = 7, w = 16, h = 12)
+    val avi = Multimodal.syntheticAvi(seed = 5L, nFrames = 7, w = 16, h = 12,
+      fmt = "jpg")
     assert(Multimodal.aviFrameChunks(avi).size === 7)
     val rows = Seq((5L, avi), (9L, "not a movie".getBytes)).toDF("doc_id", "payload")
     val got = Multimodal.videoFrames(rows, "doc_id", "payload", n = 3)
@@ -211,8 +221,8 @@ class MultimodalSpec extends SparkSpec {
     val n = 2000
     // band centers for 8 bands over [0, 4000): 250, 750, ..., 3750
     val rows = Seq(
-      (0L, Multimodal.buildSineWav(250.0, sr, n)),
-      (5L, Multimodal.buildSineWav(250.0 + 5 * 500.0, sr, n)),
+      (0L, buildSineWav(250.0, sr, n)),
+      (5L, buildSineWav(250.0 + 5 * 500.0, sr, n)),
       (9L, "not audio at all".getBytes("UTF-8")))
       .toDF("doc_id", "payload")
     val got = Multimodal.audioSpectrum(rows, "doc_id", "payload")

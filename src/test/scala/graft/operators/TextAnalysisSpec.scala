@@ -1,6 +1,10 @@
 package graft.operators
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, lit, pmod}
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 
@@ -1264,6 +1268,44 @@ class TextAnalysisSpec extends SparkSpec {
       .select("doc_id", cCols: _*)
     assert(cGot.except(declC4(docs)).count() === 0L &&
       declC4(docs).except(cGot).count() === 0L, "c4 kernel drift")
+  }
+
+  test("Gopher/C4 filter batteries are STREAMING-SAFE: the same row-local " +
+    "expressions run directly on a stream (no foreachBatch) with verdicts " +
+    "equal to the batch pass, independent of batch boundaries") {
+    import spark.implicits._
+    import graft.operators.TextAnalysis
+    val tmp = Files.createTempDirectory("gate-stateless").toString
+    val docs = Seq(
+      (1L, Seq.fill(6)("the cat and the dog have fun with big toys")
+        .mkString(" ")),
+      (2L, "tiny doc"),
+      (3L, (1 to 10).map(i => s"- b $i").mkString("\n")),
+      (4L, null.asInstanceOf[String]))
+    val batch = TextAnalysis.gopherRules(
+        docs.toDF("doc_id", "text"), "doc_id", "text")
+      .select("doc_id", "pass").as[(Long, Long)].collect().toMap
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[(Long, String)]
+    // ROW-LOCAL means the battery composes with readStream directly —
+    // no state, no foreachBatch, exactly-once by projection purity
+    val q = TextAnalysis.gopherRules(
+        ms.toDF().toDF("doc_id", "text"), "doc_id", "text")
+      .select("doc_id", "pass")
+      .writeStream.format("parquet")
+      .option("path", s"$tmp/out")
+      .option("checkpointLocation", s"$tmp/ckpt")
+      .trigger(Trigger.ProcessingTime(0))
+      .start()
+    try {
+      ms.addData(docs(0), docs(1)) // two boundaries, same verdicts
+      q.processAllAvailable()
+      ms.addData(docs(2), docs(3))
+      q.processAllAvailable()
+    } finally q.stop()
+    val streamed = spark.read.parquet(s"$tmp/out")
+      .as[(Long, Long)].collect().toMap
+    assert(streamed === batch)
   }
 
   test("lineDedup: corpus-hot lines drop everywhere, order and " +
