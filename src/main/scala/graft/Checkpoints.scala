@@ -4,7 +4,7 @@ import org.apache.spark.sql.Dataset
 
 /** Cluster-safe lineage truncation behind a runtime config.
   *
-  * Every iterative loop (connected components, PageRank), memoized build
+  * Every iterative loop (through [[Fixpoint]]), memoized build
   * artifact (winnow indexes, df tables, codebooks) and multi-consumer
   * stage pin in the engine truncates lineage through THIS helper instead
   * of calling `localCheckpoint` directly, so one conf flips the whole
@@ -23,8 +23,10 @@ import org.apache.spark.sql.Dataset
   * RETENTION (reliable mode): Spark never deletes reliable checkpoint
   * files by default (`spark.cleaner.referenceTracking.cleanCheckpoints`
   * is `false`, and it is a context-start conf a library cannot flip at
-  * runtime). The iterative loops here (connected components, PageRank,
-  * LPA, k-core) pin every few rounds, so a long-lived driver accumulates
+  * runtime). The iterative loops pin their state through [[Fixpoint]]:
+  * every round where a convergence measure is read off the pin
+  * (connected components, k-core, BFS), every 4th and the last round
+  * otherwise (PageRank, LPA). A long-lived driver therefore accumulates
   * checkpoint data in the configured directory without bound. Cluster
   * operators running reliable mode should either (a) set
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true` at context

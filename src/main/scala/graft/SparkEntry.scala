@@ -3855,8 +3855,8 @@ object SparkEntry {
     }),
 
     // k-core of the shared co-purchase graph: customers mutually supported
-    // by ≥35 fellow core members. The peel runs to its fixpoint (4 rounds
-    // at sf0.01); the oracle unrolls 8 SQL rounds — sound because the
+    // by ≥35 fellow core members. The peel runs to its fixpoint (3 peel
+    // rounds at sf0.01); the oracle unrolls 8 SQL rounds — sound because the
     // k-core is ORDER-INDEPENDENT and peeling past convergence removes
     // nothing, so any unroll ≥ the true depth lands on the same core
     "graph_kcore" -> ((s, dir) => {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
+import graft.{Fixpoint, Observed}
 import graft.Checkpoints.PinOps
 
 /** Corpus deduplication operators for the extended (training-data pipeline)
@@ -69,8 +70,7 @@ object Dedup {
     * an observed metric so the loss is visible, never silent. */
   private def capBuckets(grouped: DataFrame, maxBucket: Int,
                          metric: String): DataFrame =
-    grouped
-      .observe(metric,
+    Observed.observe(grouped, metric,
         sum(when(size(col("ms")) > maxBucket, 1L).otherwise(0L))
           .as("dropped_buckets"))
       .where(size(col("ms")) <= maxBucket)
@@ -1020,8 +1020,9 @@ object Dedup {
     // one row per DISTINCT vector per cell
     val groups = sized.groupBy(col("cell"), col("iq"), col("n2"))
       .agg(min(col("vec_id")).as("gmin"))
-    val hot = groups.groupBy("cell").agg(count(lit(1)).as("_c"))
-      .observe("semantic_dedup_cells",
+    val hot = Observed.observe(
+        groups.groupBy("cell").agg(count(lit(1)).as("_c")),
+        "semantic_dedup_cells",
         sum(when(col("_c") > maxCell, 1L).otherwise(0L))
           .as("dropped_cells"))
       .where(col("_c") > maxCell).select("cell")
@@ -1059,80 +1060,41 @@ object Dedup {
     * representative kept": transitively-linked documents form ONE cluster
     * (a~b, b~c ⇒ {a,b,c}), labeled by the cluster's minimum id.
     *
-    * Algorithm: hash-min label propagation — every node starts as its own
-    * label; each round, a node adopts the minimum label among itself and
-    * its neighbors; fixpoint when no label changes. Each round is one
-    * (edge ⋈ label) shuffle + a min-aggregation — the standard scalable
-    * shape (no driver-side graph, no quadratic closure). Rounds needed =
-    * component diameter, which for near-dup clusters is small (dup groups
-    * are dense); for long-chain graphs a pointer-jumping variant would cut
-    * rounds to O(log d), not needed here. The iteration is a driver LOOP
-    * but each step is fully distributed; `maxIter` bounds pathological
-    * chains, erring toward over-segmentation, never corruption.
+    * Algorithm: hash-min label propagation — each round, a node adopts
+    * the minimum label among itself and its neighbors: one (edge ⋈ label)
+    * shuffle + a min-aggregation, no driver-side graph. Rounds needed =
+    * component diameter, small for dense near-dup groups. The rounds run
+    * through [[graft.Fixpoint]], one pin each, which also reports how many
+    * labels the round lowered. Labels still moving at `maxIter` would
+    * over-segment clusters, so the call FAILS LOUDLY there instead.
     *
     * Output: (doc, cluster) for every id in `pairs` — singleton documents
     * never enter a pair list, so they are implicitly their own cluster. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 25): DataFrame = {
-    // Persist the DIRECTED pair list BEFORE symmetrizing: the union
-    // references the (potentially expensive — a whole near-dup pipeline)
-    // pairs plan twice, and aliased subplans don't share exchanges, so an
-    // unpersisted input would be computed once per branch (measured: 7 of
-    // dedup_clusters' 10.7s were re-deriving the Jaccard pairs inside the
-    // first iteration). No distinct() after the union: pair lists are
-    // already distinct and min() is idempotent to duplicates — a dedup
-    // shuffle here is pure overhead.
-    val fwd = pairs.select(col(aCol).as("u"), col(bCol).as("v")).persist()
-    // co-partitioned pin (r19): the loop joins `edges` on u every
-    // iteration; pinning the symmetrized list hash-partitioned on u
-    // moves that corpus-scale exchange out of the loop (the label side
-    // still exchanges — it changes per round). The eager pin also lets
-    // fwd's cache go immediately instead of at loop exit.
+    // both directions from one read of the (possibly expensive) pairs
+    // plan; no distinct(), since min() ignores duplicates. Pinned
+    // hash-partitioned on u, so no round re-exchanges the edges (r19)
     val edges = graft.Checkpoints.pinPartitioned(
-      fwd.unionByName(fwd.select(col("v").as("u"), col("u").as("v"))),
+      pairs.select(explode(array(
+          struct(col(aCol).as("u"), col(bCol).as("v")),
+          struct(col(bCol).as("u"), col(aCol).as("v")))).as("e"))
+        .select("e.u", "e.v"),
       Seq("u"))
-    fwd.unpersist()
-    var labels = edges.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("label")).persist()
-    var cached = labels // the DataFrame actually holding the cache entry
-    var changed = 1L
-    var it = 0
-    val ccLog = sys.env.contains("SPARK_GRAFT_CC_LOG")
-    while (changed > 0 && it < maxIter) {
-      val itT0 = System.nanoTime()
+    Fixpoint.untilStable("connected components",
+        edges.select(col("u").as("node")).distinct()
+          .select(col("node"), col("node").as("label")),
+        maxIter,
+        _ => count(when(col("label") < col("_old"), true))
+          .as("labels_lowered")) { (labels, _) =>
       val nbrMin = edges
         .join(labels.select(col("node").as("u"), col("label").as("l_u")), "u")
         .groupBy(col("v").as("node")).agg(min(col("l_u")).as("nbr_min"))
-      // carry the old label through the projection so `changed` is a
-      // filter-count on the already-persisted frame, not a second join
-      // re-deriving labels (the original shape paid a join + shuffle per
-      // iteration just for the convergence check)
-      val next = labels.join(nbrMin, Seq("node"), "left_outer")
+      labels.join(nbrMin, Seq("node"), "left_outer")
         .select(col("node"), col("label").as("_old"),
           least(col("label"), coalesce(col("nbr_min"), col("label")))
             .as("label"))
-        .persist()
-      changed = next.where(col("label") < col("_old")).count()
-      cached.unpersist()
-      cached = next
-      // truncate lineage every few rounds: each iteration otherwise nests
-      // the previous plan, and a deep component would grow the logical
-      // plan (and its analysis time) linearly with the round count
-      val nextLabels = next.select("node", "label")
-      labels = if (it % 5 == 4) nextLabels.pin() else nextLabels
-      if (ccLog) System.err.println(
-        f"[cc] iter $it changed=$changed ${(System.nanoTime() - itT0) / 1e9}%.2fs")
-      it += 1
-    }
-    // materialize the result OUT of the loop caches (eager checkpoint —
-    // the label table is small: one row per paired node), then drop the
-    // last persisted frame: a CacheManager entry is never GC'd, so
-    // returning a frame backed by the loop's persist would leak one
-    // entry per invocation in a long-lived driver (Bench reps, notebooks)
-    val out = labels.select(col("node").as("doc"), col("label").as("cluster"))
-      .pin()
-    cached.unpersist()
-    out
+    }.select(col("node").as("doc"), col("label").as("cluster"))
   }
 
   /** INCREMENTAL dedup: near-dup pairs BETWEEN two corpora — each (new,
@@ -1221,8 +1183,8 @@ object Dedup {
     // capBuckets gave the one-corpus path (a hot templated batch must
     // not cross an under-cap ref bucket into a quadratic blowup)
     def hotSide(p: DataFrame, metric: String) = {
-      val counts = p.groupBy("p").agg(count(lit(1)).as("_c"))
-        .observe(metric,
+      val counts = Observed.observe(
+          p.groupBy("p").agg(count(lit(1)).as("_c")), metric,
           sum(when(col("_c") > maxBucket, 1L).otherwise(0L))
             .as("dropped_buckets"))
       counts.where(col("_c") > maxBucket).select("p")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.{Fixpoint, Observed}
 import graft.Checkpoints.PinOps
 
 /** Graph analytics over edge lists — the link-analysis tier of a corpus
@@ -11,8 +12,9 @@ import graft.Checkpoints.PinOps
   *
   * Everything is DataFrame-iterative: per iteration one join on the edge
   * source + one aggregation on the destination — the standard distributed
-  * PageRank dataflow. No driver-side graph state; rank tables checkpoint
-  * per round so the plan doesn't nest with the iteration count.
+  * PageRank dataflow. No driver-side graph state; the loops run through
+  * [[graft.Fixpoint]], whose pins keep the plan from nesting with the
+  * iteration count.
   */
 object Graph {
 
@@ -52,7 +54,6 @@ object Graph {
     * standard operating point, and each costs one edge⋈rank shuffle. */
   def pageRankInt(edges: DataFrame, srcCol: String, dstCol: String,
                   iters: Int, memoKey: Option[String] = None): DataFrame = {
-    require(iters >= 1, "at least one iteration")
     // edge table with out-degree attached, materialized ONCE: every
     // iteration re-reads it, and an unmaterialized plan would re-derive
     // the (possibly expensive) edge expression per round. With `memoKey`
@@ -61,13 +62,8 @@ object Graph {
     def build(): (DataFrame, DataFrame) = {
       val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      // co-partitioned pins (r19): every iteration joins `ed` on src and
-      // outer-joins `nd` on node, and a plain pin loses the partitioning
-      // — each round re-exchanged BOTH loop constants (measured: 4
-      // Exchanges per round, 2 of them these tables). Pinning them
-      // hash-partitioned on their join keys moves those two exchanges
-      // out of the loop; per round only the rank side and the combined
-      // contribution partials still shuffle.
+      // pinned hash-partitioned on their join keys, so no round
+      // re-exchanges these two loop constants (r19)
       val ed = graft.Checkpoints.pinPartitioned(
         e.join(deg, "src"), Seq("src"))
       val nd = graft.Checkpoints.pinPartitioned(
@@ -81,27 +77,19 @@ object Graph {
         degCache.getOrCompute(edges.sparkSession, key)(build())
       case None => build()
     }
-    var ranks = nodes.select(col("node"), lit(1000000L).as("rank"))
-    for (i <- 0 until iters) {
+    Fixpoint.repeat(nodes.select(col("node"), lit(1000000L).as("rank")),
+        iters) { ranks =>
       val contrib = edgesDeg
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst"),
           expr("(rank * 850) div (1000 * outdeg)").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("c"))
-      ranks = nodes
+      nodes
         .join(contrib.withColumnRenamed("dst", "node"), Seq("node"),
           "left_outer")
         .select(col("node"),
           (lit(150000L) + coalesce(col("c"), lit(0L))).as("rank"))
-      // Each round references the previous ranks exactly ONCE, so rounds
-      // may nest lazily without duplicated work; checkpoint every 4th
-      // round (deep-plan guard for large iters) and at the end. Locally a
-      // wash at 3 iterations (the edge build dominates); at scale fewer
-      // eager materializations of a corpus-sized rank table is the safe
-      // default.
-      if (i % 4 == 3 || i == iters - 1) ranks = ranks.pin()
     }
-    ranks
   }
 
   /** Community detection by SYNCHRONOUS weighted label propagation:
@@ -121,24 +109,17 @@ object Graph {
     * normally excluded upstream. */
   def labelPropagation(edges: DataFrame, uCol: String, vCol: String,
                        wCol: String, iters: Int): DataFrame = {
-    require(iters >= 1, "at least one iteration")
     val e0 = edges.select(col(uCol).as("u"), col(vCol).as("v"),
       col(wCol).as("w"))
-    // plain pin, deliberately NOT the co-partitioned one (r19 A/B): sym
-    // is rebuilt per call (no dataset memo here), so the extra fixed-N
-    // exchange before the pin cost more than the 3 per-round join
-    // exchanges it saved (best-of-5 2.10 -> 2.65 s); pageRankInt's build
-    // IS memoized, which is why the same treatment wins there
+    // a plain pin: sym is rebuilt per call, and a co-partitioned pin's
+    // extra exchange cost more than the round exchanges it saved (r19)
     val sym = e0.unionByName(
       e0.select(col("v").as("u"), col("u").as("v"), col("w")))
       .pin() // read every round
     val nodes = sym.select(col("u").as("node")).distinct().pin()
-    var labels = nodes.select(col("node"), col("node").as("lbl"))
-    for (i <- 0 until iters) {
-      labels = lpaRound(sym, labels)
-      if (i % 4 == 3 || i == iters - 1) labels = labels.pin()
-    }
-    labels.select(col("node"), col("lbl").as("community"))
+    Fixpoint.repeat(nodes.select(col("node"), col("node").as("lbl")),
+        iters)(lpaRound(sym, _))
+      .select(col("node"), col("lbl").as("community"))
   }
 
   /** One synchronous LPA round: neighbor-label weight votes, then the
@@ -172,10 +153,13 @@ object Graph {
                         minShared: Long, maxPerVia: Long = 1000): DataFrame = {
     val nv = df.select(col(nodeCol).as("node"), col(viaCol).as("via"))
       .distinct()
-    val keptVias = nv.groupBy("via").agg(count(lit(1)).as("n_nodes"))
-      // the cap trades recall, never silently: dropped vias are counted
-      // in an observed metric, like the dedup family's bucket caps
-      .observe("cooccurrence_vias",
+    // the cap trades recall, never silently: dropped vias are counted in
+    // an observed metric, like the dedup family's bucket caps. edgesFor's
+    // eager pin runs it at build time, so it goes through Observed.observe
+    // to reach Observed.run callers
+    val keptVias = Observed.observe(
+        nv.groupBy("via").agg(count(lit(1)).as("n_nodes")),
+        "cooccurrence_vias",
         sum(when(col("n_nodes") > maxPerVia, 1L).otherwise(0L))
           .as("dropped_vias"))
       .where(col("n_nodes") <= maxPerVia).select("via")
@@ -253,83 +237,58 @@ object Graph {
     * distinct + one anti-join against the settled set — the textbook
     * distributed frontier expansion; no per-walk enumeration, so cycles
     * and diamond fan-in cost nothing (a node is settled the first level
-    * it appears, which IS its shortest distance). Frontier and settled
-    * tables are materialized per level (the settled set is read by every
-    * later anti-join); levels are bounded by `maxHops`, and the loop
-    * exits early when a frontier empties. Output: (node, dist) for every
-    * node within `maxHops` of a seed; unreached nodes are absent. */
+    * it appears, which IS its shortest distance). Each level pins one
+    * state, the settled set, through [[graft.Fixpoint.upTo]]; the
+    * frontier is the previous level's rows of it, and the level's measure
+    * is how many nodes it settled: the loop exits early at 0. Output:
+    * (node, dist) for every node within `maxHops` of a seed; unreached
+    * nodes are absent. */
   def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
                     seeds: Seq[String], maxHops: Int): DataFrame = {
     require(seeds.nonEmpty, "at least one seed node")
-    require(maxHops >= 1, "at least one hop")
     val spark = edges.sparkSession
     import spark.implicits._
-    // NOT co-partition-pinned (r19 A/B): like labelPropagation, this
-    // projection is rebuilt per call, and at 3-hop depth the extra
-    // fixed-N exchange+materialization cost what the per-level join
-    // exchanges saved (flat-to-worse best-of-5)
+    // not co-partition-pinned, as in labelPropagation (r19)
     val e = edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst"))
-    var settled = seeds.distinct.toDF("node")
-      .select(col("node"), lit(0L).as("dist")).pin()
-    var frontier = settled
-    var hop = 1L
-    var exhausted = false
-    while (!exhausted && hop <= maxHops) {
-      val next = e
-        .join(frontier.select(col("node").as("src")), "src")
-        .select(col("dst").as("node")).distinct()
-        .join(settled, Seq("node"), "left_anti")
-        .select(col("node"), lit(hop).as("dist"))
-        .pin()
-      if (next.isEmpty) exhausted = true
-      else {
-        settled = settled.unionByName(next).pin()
-        frontier = next
-        hop += 1
-      }
+    Fixpoint.upTo("shortest paths",
+        seeds.distinct.toDF("node").select(col("node"), lit(0L).as("dist")),
+        maxHops,
+        hop => count(when(col("dist") === hop.toLong, true)).as("settled")) {
+      (settled, hop) =>
+        settled.unionByName(e
+          .join(settled.where(col("dist") === hop - 1L)
+            .select(col("node").as("src")), "src")
+          .select(col("dst").as("node")).distinct()
+          .join(settled, Seq("node"), "left_anti")
+          .select(col("node"), lit(hop.toLong).as("dist")))
     }
-    settled
   }
 
   /** k-core membership: the unique maximal subgraph in which every node
     * keeps degree ≥ k, by distributed iterative peeling — the "densest
-    * stable cluster" trust tier of a link graph (a node in the k-core is
-    * mutually supported by k other core members, not just popular among
-    * peripherals).
+    * stable cluster" trust tier of a link graph.
     *
-    * Peeling is ORDER-INDEPENDENT: whatever order sub-k nodes leave in,
-    * the fixpoint is the same unique core — which is what makes a
-    * fixed-round unrolled SQL replay exact, because rounds past
-    * convergence peel nothing (the oracle unrolls a few spare rounds;
-    * the loop here exits the first round that removes no edge).
+    * Peeling is ORDER-INDEPENDENT: the fixpoint is the same unique core
+    * whatever order sub-k nodes leave in, which makes the oracle's
+    * fixed-round unrolled SQL replay exact (rounds past convergence peel
+    * nothing).
     *
-    * Scale shape per round: ONE degree hash-aggregate over the surviving
-    * symmetric edge list + two semi-joins filtering both endpoints, each
-    * materialized with `localCheckpoint` so lineage never stacks across
-    * rounds. Rounds are bounded by `maxRounds` (the true bound is the
-    * peel depth, typically a handful — degeneracy ordering removes whole
-    * degree layers at once). No node list ever reaches the driver; the
-    * fixpoint test is a count comparison.
+    * Scale shape per round: drop the edges at a sub-k endpoint, then ONE
+    * degree hash-aggregate over the survivors, joined back onto both
+    * endpoints — one [[graft.Fixpoint]] pin, which also reports how many
+    * edges are still to peel. No node list reaches the driver.
     *
-    * Output: (node, core_degree) for core members — core_degree is the
-    * node's degree INSIDE the core (≥ k by construction), the exact
-    * integer that makes the result hash-verifiable. Empty when the graph
-    * has no k-core.
-    *
+    * Output: (node, core_degree) for core members, core_degree being the
+    * node's degree INSIDE the core (≥ k); empty when there is no k-core.
     * Input is normalized to a SIMPLE graph first (self-loops dropped,
-    * duplicate edge rows deduped): a self-loop would add 2 to its node's
-    * degree and duplicate rows would double-count, keeping nodes in the
-    * "core" without k distinct core neighbors. If `maxRounds` is
-    * exhausted before the fixpoint, the residual is NOT a k-core
-    * (sub-k nodes remain) — the method FAILS LOUDLY rather than emit
-    * rows that break the ≥ k contract; peel depth can be graph-diameter
-    * deep on path-like graphs, so raise `maxRounds` for those. */
+    * duplicate rows deduped), which would otherwise inflate degrees. A
+    * residual left at `maxRounds` is NOT a k-core, so the call FAILS
+    * LOUDLY there; peel depth can be diameter-deep on path-like graphs. */
   def kCore(edges: DataFrame, uCol: String, vCol: String, k: Long,
             maxRounds: Int = 20): DataFrame = {
     require(k >= 1, "k-core needs k >= 1")
-    require(maxRounds >= 1, "at least one peel round")
-    var sym = edges
+    val sym = edges
       .select(col(uCol).cast("long").as("u"), col(vCol).cast("long").as("v"))
       .where(col("u") =!= col("v"))
       .unionByName(edges
@@ -337,27 +296,18 @@ object Graph {
         .where(col("u") =!= col("v")))
       .distinct()
       .pin()
-    var edgeCount = sym.count()
-    var round = 0
-    var stable = edgeCount == 0L
-    while (!stable && round < maxRounds) {
-      val keep = sym.groupBy("u").agg(count(lit(1)).as("d"))
-        .where(col("d") >= k).select("u")
-      val pruned = sym
-        .join(keep, Seq("u"), "left_semi")
-        .join(keep.select(col("u").as("v")), Seq("v"), "left_semi")
-        .pin()
-      val prunedCount = pruned.count()
-      stable = prunedCount == edgeCount
-      sym = pruned
-      edgeCount = prunedCount
-      round += 1
+    // each state row carries both endpoints' degrees within the state
+    def withDegrees(e: DataFrame): DataFrame = {
+      val deg = e.groupBy("u").agg(count(lit(1)).as("du"))
+      e.join(deg, "u")
+        .join(deg.select(col("u").as("v"), col("du").as("dv")), "v")
     }
-    require(stable,
-      s"k-core did not converge in $maxRounds rounds ($edgeCount edges " +
-        "remain with sub-k nodes); raise maxRounds — emitting the " +
-        "residual would violate the core_degree >= k contract")
-    sym.groupBy("u").agg(count(lit(1)).as("core_degree"))
+    Fixpoint.untilStable("k-core", withDegrees(sym), maxRounds,
+        _ => count(when(col("du") < k || col("dv") < k, true))
+          .as("edges_to_peel")) { (state, _) =>
+      withDegrees(state.where(col("du") >= k && col("dv") >= k)
+        .select("u", "v"))
+    }.groupBy("u").agg(count(lit(1)).as("core_degree"))
       .select(col("u").as("node"), col("core_degree"))
   }
 }

@@ -7,14 +7,15 @@ import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
 
 /** `spark.graft.checkpoint.mode` contract: the reliable (cluster-safe)
-  * mode must reproduce the local mode's results exactly on an iterative
-  * query — `dedup_winnow_clusters` runs connected-components, whose every
-  * iteration pins lineage through [[Checkpoints]] — and must actually
-  * write checkpoint data to the configured directory. This is the config
-  * that converts the engine's one named correctness-at-scale concession
-  * (localCheckpoint blocks die with an executor) into shipped behavior:
-  * flip the conf and every lineage pin in the engine survives executor
-  * loss. */
+  * mode must reproduce the local mode's results exactly on iterative
+  * queries — `dedup_winnow_clusters` (connected components),
+  * `graph_kcore` and `graph_shortest_paths` pin every round through
+  * [[Fixpoint]] and read their convergence measure off that pin — and
+  * must actually write checkpoint data to the configured directory. This
+  * is the config that converts the engine's one named correctness-at-scale
+  * concession (localCheckpoint blocks die with an executor) into shipped
+  * behavior: flip the conf and every lineage pin in the engine survives
+  * executor loss. */
 class CheckpointModeSpec extends SparkSpec {
 
   private def winnowClusters(keySuffix: String): Seq[(Long, Long)] = {
@@ -26,6 +27,13 @@ class CheckpointModeSpec extends SparkSpec {
       .select(col("doc").cast("long"), col("cluster").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
   }
+
+  /** A registered loop query's rows, sorted. */
+  private def queryRows(name: String): Seq[String] =
+    SparkEntry.queries(name)(spark, sfDir).collect().map(_.toString)
+      .toSeq.sorted
+
+  private val loopQueries = Seq("graph_kcore", "graph_shortest_paths")
 
   test("reliable mode without a dir fails fast with the conf names") {
     // the seam covers the error path UNCONDITIONALLY — it takes the
@@ -60,10 +68,14 @@ class CheckpointModeSpec extends SparkSpec {
     } finally spark.conf.unset(Checkpoints.ModeKey)
   }
 
+  // also graph_kcore and graph_shortest_paths: their convergence
+  // measures come from the reliable checkpoint jobs
   test("reliable mode reproduces dedup_winnow_clusters exactly " +
     "and writes reliable checkpoint data") {
     val local = winnowClusters("local")
     assert(local.nonEmpty, "fixture must produce clusters")
+    val localLoops = loopQueries.map(queryRows)
+    assert(localLoops.forall(_.nonEmpty), "fixture must produce loop rows")
 
     val dir = Files.createTempDirectory("graft-ckpt-spec").toString
     spark.conf.set(Checkpoints.ModeKey, "reliable")
@@ -71,6 +83,7 @@ class CheckpointModeSpec extends SparkSpec {
     try {
       val reliable = winnowClusters("reliable")
       assert(reliable === local)
+      assert(loopQueries.map(queryRows) === localLoops)
       // the pins really went through Dataset.checkpoint: rdd-* block
       // dirs exist under the configured checkpoint root
       val wrote = Files.walk(Paths.get(dir)).anyMatch(

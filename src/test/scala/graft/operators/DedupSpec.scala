@@ -210,13 +210,26 @@ class DedupSpec extends SparkSpec {
 
   test("connected components converge on a long chain (exercises lineage truncation)") {
     import spark.implicits._
-    // a 30-node path graph: diameter 29 -> needs many propagation rounds
-    // and crosses the every-5-rounds localCheckpoint boundary repeatedly
+    // a 30-node path graph: diameter 29 -> needs many propagation rounds,
+    // each one a pinned round whose lineage the next round starts from
     val chain = (1L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val got = Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = 40)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size === 30)
     assert(got.values.toSet === Set(1L)) // one component, min-labeled
+  }
+
+  test("connected components below the chain's diameter fail loudly " +
+    "instead of returning over-segmented labels") {
+    import spark.implicits._
+    val chain = (1L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = 10)
+        .collect()
+    }
+    assert(e.getMessage.contains("connected components"))
+    assert(e.getMessage.contains("10 rounds"))
+    assert(e.getMessage.contains("labels_lowered"))
   }
 
   test("connected components agree with per-pair transitive closure on the real corpus") {
