@@ -5,7 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Shared session factory for the engine's mains: one place for the confs
   * that affect correctness/scale so Verify, Bench and Smoke can't drift.
   * Injects the custom-function SQL surface (GraftSql) so every engine
-  * session can call nfkc_normalize etc. from SQL text. */
+  * session can call nfkc_normalize etc. from SQL text. The two
+  * `spark.hadoop.fs.*file.impl` entries swap in a local file system that
+  * sets permissions and resolves links in-process
+  * ([[graft.sources.NioRawLocalFileSystem]]): without libhadoop the stock
+  * one forks a `chmod` per file or directory written and a `readlink` per
+  * checkpoint-log rename. */
 object Sessions {
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
@@ -31,4 +36,8 @@ object Sessions {
       .config("spark.sql.warehouse.dir",
         sys.props("java.io.tmpdir") + "/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.NioLocalFs].getName)
 }

@@ -110,8 +110,11 @@ object Sinks {
     val fs = fsOf(spark)
     val targetPath = new Path(target)
     recover(spark, target)
+    // A4 non-empty gate, ref :157-158. Read with the new frame's schema:
+    // no inference job, and a dir without parquet files reads as empty;
+    // isEmpty selects no column, so an older schema cannot conflict.
     val oldNonEmpty = fs.exists(targetPath) &&
-      !spark.read.parquet(target).isEmpty // A4 non-empty gate, ref :157-158
+      !spark.read.schema(df.schema).parquet(target).isEmpty
     // stage FIRST: df may itself read from the current target
     val staging = new Path(target + ".staging-" + clock())
     df.write.mode("overwrite").parquet(staging.toString)

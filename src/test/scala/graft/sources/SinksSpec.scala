@@ -215,6 +215,28 @@ class SinksSpec extends SparkSpec {
     assert(leftovers.isEmpty)
   }
 
+  test("snapshot overwrite: an existing target without parquet files takes no backup") {
+    import spark.implicits._
+    val root = tmp()
+    val target = s"$root/kb"
+    new java.io.File(target).mkdirs()
+    val b = Sinks.snapshotOverwrite(spark, Seq("a", "b").toDF("v"), target, root)
+    assert(b.isEmpty)
+    assert(!new java.io.File(root).list().exists(_.startsWith("backup_")))
+    assert(spark.read.parquet(target).as[String].collect().sorted === Array("a", "b"))
+  }
+
+  test("snapshot overwrite: an old snapshot of another schema is still backed up") {
+    import spark.implicits._
+    val root = tmp()
+    val target = s"$root/kb"
+    Sinks.snapshotOverwrite(spark, Seq((1L, 2.5)).toDF("k", "w"), target, root)
+    val b = Sinks.snapshotOverwrite(spark, Seq("x").toDF("v"), target, root)
+    assert(b.isDefined)
+    assert(spark.read.parquet(b.get).as[(Long, Double)].collect() === Array((1L, 2.5)))
+    assert(spark.read.parquet(target).as[String].collect() === Array("x"))
+  }
+
   test("snapshot overwrite: same-second backups get distinct names, none hidden") {
     import spark.implicits._
     val root = tmp()
