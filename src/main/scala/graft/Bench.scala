@@ -1,6 +1,15 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
 import scala.util.control.NonFatal
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, V2WriteCommand}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.PlanMetricsDump
 
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}.
@@ -38,6 +47,9 @@ import scala.util.control.NonFatal
   * SPARK_GRAFT_BENCH_ONLY=<name,name,...> restricts the run to a subset —
   * the triage loop for exactly such regressions.
   *
+  * Each query's executed plan (last rep, AQE final stages, non-zero
+  * operator metrics) goes to `plans/last/<query>.txt`, off the clock.
+  *
   * Box-load canary: full runs bracket the battery with a fixed 3-query
   * best-of-3 pass (`canary_before`/`canary_after` maps in
   * BENCH_FULL.json, summed `canary_before_sec`/`canary_after_sec` on
@@ -50,6 +62,51 @@ import scala.util.control.NonFatal
   * broken canary can never more than double them). The confirm re-runs
   * stay at base ratios. */
 object Bench {
+
+  private val PlanDir = Paths.get("plans", "last")
+
+  /** Executed plans of the context's V2 writes, from every session (two
+    * registry queries write through child sessions of their own).
+    * [[planOf]] drains the listener bus, then renders the latest write
+    * only if it wrote `df`'s own analyzed plan: eager pins fired by
+    * `df`'s build post their own executions, so the last one to arrive
+    * may be a pin's. */
+  private[graft] final class PlanCapture(spark: SparkSession)
+      extends SparkListener {
+    @volatile private var last: (LogicalPlan, QueryExecution) = null
+    spark.sparkContext.addSparkListener(this)
+    override def onOtherEvent(e: SparkListenerEvent): Unit =
+      PlanMetricsDump.executionOf(e).foreach(qe => qe.logical match {
+        case w: V2WriteCommand => last = (w.query, qe)
+        case _ =>
+      })
+    def planOf(df: DataFrame): Option[String] = {
+      PlanMetricsDump.drainListenerBus(spark)
+      Option(last).collect {
+        case (in, qe) if in eq df.queryExecution.analyzed =>
+          PlanMetricsDump.render(qe.executedPlan)
+      }
+    }
+    def close(): Unit = spark.sparkContext.removeSparkListener(this)
+  }
+
+  /** `df`'s plan to `plans/last/<name>.txt`; a failed last rep (`df`
+    * empty) or a missed capture leaves no file. Never fatal. */
+  private def savePlan(capture: PlanCapture, name: String,
+                       df: Option[DataFrame]): Unit = {
+    val file = PlanDir.resolve(s"$name.txt")
+    try df.flatMap(capture.planOf) match {
+      case Some(plan) =>
+        Files.createDirectories(PlanDir)
+        Files.write(file, plan.getBytes(StandardCharsets.UTF_8))
+      case None =>
+        Files.deleteIfExists(file)
+        if (df.nonEmpty) System.err.println(s"[bench] $name: no plan captured")
+    } catch {
+      case NonFatal(e) => System.err.println(
+        s"[bench] $name: plan capture failed: ${failureReason(e)}")
+    }
+  }
 
   /** Median and the p25/p75 order statistics of the rep times. */
   private def stats(times: Seq[Double]): (Double, Double, Double) = {
@@ -289,19 +346,23 @@ object Bench {
     // that clustering.
     val timesByName = scala.collection.mutable.LinkedHashMap[
       String, Vector[Double]](selected.map(_._1 -> Vector.empty[Double]): _*)
+    val capture = new PlanCapture(spark)
     for (rep <- 1 to reps; (name, fn) <- selected) {
       val t0 = System.nanoTime()
-      val t =
+      val (t, written) =
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
+          val df = fn(spark, sfDir)
+          df.write.format("noop").mode("overwrite").save()
+          ((System.nanoTime() - t0) / 1e9, Some(df))
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED (rep $rep): ${e.getMessage}")
-            -1.0
+            (-1.0, None)
         }
       timesByName(name) = timesByName(name) :+ t
+      if (rep == reps) savePlan(capture, name, written)
     }
+    capture.close()
     val results: Seq[(String, (Double, Double, Double))] =
       selected.map { case (name, _) =>
         val times = timesByName(name)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Cluster-safe lineage truncation behind a runtime config.
   *
@@ -90,33 +90,28 @@ object Checkpoints {
     * materialized table on the same key every round should pay that
     * table's shuffle once, at pin time, not once per round.
     *
-    * Why AQE flips off around the pin: `Dataset.checkpoint` captures the
+    * Why the pin runs with AQE off: `Dataset.checkpoint` captures the
     * physical plan's `outputPartitioning` into the pinned `LogicalRDD`,
     * but an adaptively-executed plan reports it through
     * `AdaptiveSparkPlanExec` where it is not statically resolvable, so
     * the capture degrades to Unknown and every consumer re-exchanges
     * (measured, Spark 4.1). With AQE off for just this one shuffle the
     * partitioning captures exactly, and AQE-on consumers then match the
-    * other join side to it (verified: the pinned side joins with zero
-    * Exchange). The flip is session-visible for the pin's duration —
-    * confine concurrent-query drivers to per-thread sessions or accept
-    * one non-adaptive shuffle.
+    * other join side to it (the pinned side joins with zero Exchange).
+    * The shuffle runs in a clone of the session ([[org.apache.spark.sql
+    * .graft.PinnedStats.withAdaptiveOff]]), so the caller's session, and
+    * queries running beside it, never see AQE off.
     *
-    * The partition count defaults to the session's shuffle partitions
+    * The partition count is the session's shuffle partitions
     * (scale-configured, never a local constant); consumers' other sides
     * exchange to the same count. */
-  def pinPartitioned[T](ds: Dataset[T], keys: Seq[String],
-                        numPartitions: Option[Int] = None): Dataset[T] = {
+  def pinPartitioned(ds: DataFrame, keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "at least one partitioning key")
-    val spark = ds.sparkSession
-    val n = numPartitions.getOrElse(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(aqeKey, "true")
-    spark.conf.set(aqeKey, "false")
-    try pin(ds.repartition(n, keys.map(org.apache.spark.sql.functions.col): _*),
-      eager = true)
-    finally spark.conf.set(aqeKey, prev)
+    val n = ds.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    org.apache.spark.sql.graft.PinnedStats.withAdaptiveOff(ds) { d =>
+      pin(d.repartition(n, keys.map(org.apache.spark.sql.functions.col): _*),
+        eager = true)
+    }
   }
 
   implicit final class PinOps[T](private val ds: Dataset[T])

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared session factory for the engine's mains: one place for the confs
-  * that affect correctness/scale so Verify, Bench and Smoke can't drift.
+  * that affect correctness/scale so Verify, Bench and perfbench can't drift.
   * Injects the custom-function SQL surface (GraftSql) so every engine
   * session can call nfkc_normalize etc. from SQL text. The two
   * `spark.hadoop.fs.*file.impl` entries swap in a local file system that

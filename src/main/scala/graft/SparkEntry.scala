@@ -1754,8 +1754,8 @@ object SparkEntry {
       TextAnalysis.winnowPairs(t(s, dir, "documents"), "doc_id", "text",
         k = 5, w = 4, minShared = 8, maxDf = 20)),
 
-    // The relative-cap arm of the same join — the CapBench sizing rule
-    // operationalized AND oracled: effective cap = max(20, n_docs·2%)
+    // The relative-cap arm of the same join — the sizing rule of
+    // SCALE.md's round-15 caps table, operationalized AND oracled: effective cap = max(20, n_docs·2%)
     // with n_docs derived in-plan from the same pinned scan, so the cap
     // tracks corpus growth where the absolute default degenerates
     // (SCALE.md round-15 caps A/B; spec law in TextAnalysisSpec). 2%

@@ -337,17 +337,4 @@ object GraftFunctions {
   def cosineSim(a: Column, b: Column): Column =
     GraftBridge.column(
       CosineSimilarity(GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  /** Builtin-composed cosine (higher-order functions) — the fallback path
-    * kept for plans that must stay expressible without the custom
-    * expression; ~3-5× slower than [[cosineSim]] (no codegen). */
-  def cosineSimHof(a: Column, b: Column): Column = {
-    val ad = transform(a, _.cast("double"))
-    val bd = transform(b, _.cast("double"))
-    val dot = aggregate(zip_with(ad, bd, (x, y) => x * y), lit(0.0), (s, x) => s + x)
-    val na = aggregate(ad, lit(0.0), (s, x) => s + x * x)
-    val nb = aggregate(bd, lit(0.0), (s, x) => s + x * x)
-    when(na === 0.0 || nb === 0.0, lit(0.0))
-      .otherwise(dot / (sqrt(na) * sqrt(nb)))
-  }
 }

@@ -427,8 +427,8 @@ object TextAnalysis {
     * is counted in the `metric` observed metric (default `winnow_df_cap`:
     * distinct fingerprints dropped + the posting rows they carried), so a
     * production run sees the recall it traded. `maxDf` is an ABSOLUTE
-    * cap and therefore calibrated to a corpus size: the CapBench A/B
-    * (SCALE.md round 15) measured the base-tuned default dropping
+    * cap and therefore calibrated to a corpus size: SCALE.md's round-15
+    * caps table measured the base-tuned default dropping
     * near-everything after 3× corpus growth — scale it with expected
     * per-fingerprint duplication (copies × base-tuned df) and watch the
     * observed metric. The cap doubles as the operator's precision
@@ -441,7 +441,7 @@ object TextAnalysis {
     * effective cap becomes `max(maxDf, n_docs·perMille/1000)` with the
     * corpus size derived in-plan from the same pinned scan (no driver
     * action) — a relative cap survives corpus growth where the absolute
-    * one degenerates (the CapBench finding). Identical texts are
+    * one degenerates (SCALE.md's round-15 caps table). Identical texts are
     * exact-collapsed before the join (r16; see the body comment), so
     * join fan-out is bounded by DISTINCT-TEXT df² per fingerprint —
     * duplication inflates only the expanded output, never the join; the
@@ -476,9 +476,9 @@ object TextAnalysis {
     // every downstream relation is keyed by the group REPRESENTATIVE
     // (min doc id) instead. The first cut kept the 32-char hex key on
     // the pair relation and its expansion joins — on a degenerate
-    // corpus (CapBench's uncapped 45M-pair arm) those three fat
-    // exchanges carried 3-4x the bytes of long keys and exhausted the
-    // box's spill disk; rep-long keys put the uncapped ground-truth arm
+    // corpus (the 45M-pair uncapped arm of SCALE.md's round-15 caps
+    // table) those three fat exchanges carried 3-4x the bytes of long
+    // keys and exhausted the box's spill disk; rep-long keys put the uncapped ground-truth arm
     // back inside the budget and shrink every production shuffle too.
     // first(_t) is order-agnostic here: every row under a tkey carries
     // the identical text (md5 equality = content identity, the house

@@ -95,6 +95,17 @@ class CheckpointModeSpec extends SparkSpec {
     }
   }
 
+  // after the test above: it must be the first to set the context's
+  // (sticky) checkpoint directory
+  test("pinPartitioned keeps its partitioning in reliable mode: a " +
+    "consumer join on the key does not re-exchange the pinned side") {
+    val s = spark.newSession()
+    s.conf.set(Checkpoints.ModeKey, "reliable")
+    s.conf.set(Checkpoints.DirKey,
+      Files.createTempDirectory("graft-pin-spec").toString)
+    PinPartitionedSpec.assertConsumerJoinReadsPinAsIs(s)
+  }
+
   test("lazy pins fire no job at plan-build time") {
     // a plan that THROWS on evaluation separates the modes exactly:
     // pinLazy must return without evaluating (the pipeline_dsir

@@ -126,6 +126,48 @@ class GraftFunctionsSpec extends SparkSpec {
         transform(sequence(lit(0), lit(n - 1)), seed => xxhash64(seed, s)),
         (a, b) => least(a, b)))
 
+  /** Interpreted HOF formulation of [[GraftFunctions.cosineSim]]: the
+    * float-widened products and squares summed left to right in double,
+    * zero for a zero-norm side. */
+  private def cosineSimHof(a: Column, b: Column): Column = {
+    val ad = transform(a, _.cast("double"))
+    val bd = transform(b, _.cast("double"))
+    val dot = aggregate(zip_with(ad, bd, (x, y) => x * y), lit(0.0), (s, x) => s + x)
+    val na = aggregate(ad, lit(0.0), (s, x) => s + x * x)
+    val nb = aggregate(bd, lit(0.0), (s, x) => s + x * x)
+    when(na === 0.0 || nb === 0.0, lit(0.0))
+      .otherwise(dot / (sqrt(na) * sqrt(nb)))
+  }
+
+  test("codegen'd CosineSimilarity == interpreted HOF formulation") {
+    import spark.implicits._
+    val emb = graft.Tables(spark, sfDir, "embeddings")
+      .where($"vec_id" < 40).select($"vec_id", $"embedding")
+    val pairs = emb.select($"vec_id".as("id_a"), $"embedding".as("va"))
+      .crossJoin(emb.select($"vec_id".as("id_b"), $"embedding".as("vb")))
+    // separate projections: an interpreted (CodegenFallback) expression
+    // would take the kernel's projection out of whole-stage codegen
+    val fast = pairs.select($"id_a", $"id_b", cosineSim($"va", $"vb"))
+    val slow = pairs.select($"id_a", $"id_b", cosineSimHof($"va", $"vb"))
+    def byPair(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val cos = byPair(fast)
+    assert(cos.size === 1600)
+    assert(cos.values.exists(c => c != 0.0 && c < 0.999))
+    // the kernel accumulates the same double terms in the same
+    // left-to-right order as the HOF fold, so no rounding can differ:
+    // the tolerance is zero
+    assert(cos === byPair(slow))
+    val codegenProject = new org.apache.spark.sql.execution.adaptive
+        .AdaptiveSparkPlanHelper {}.collect(fast.queryExecution.executedPlan) {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+    }.flatMap(_.child.collect {
+      case p: org.apache.spark.sql.execution.ProjectExec => p
+    }).filter(_.projectList.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.graft.CosineSimilarity])))
+    assert(codegenProject.nonEmpty, fast.queryExecution.executedPlan.toString)
+  }
+
   test("codegen'd MinHashSignature expression == interpreted HOF formulation") {
     import spark.implicits._
     val docs = graft.Tables(spark, sfDir, "documents")
