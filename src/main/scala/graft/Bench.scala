@@ -33,8 +33,11 @@ import org.apache.spark.sql.graft.PlanMetricsDump
   * masquerade as a fast run, and the failure is printed to stderr.
   *
   * Regression tracking: when a previous round's bench JSON is present
-  * (SPARK_GRAFT_BENCH_PREV=<file>, or the highest BENCH_r*.json in the
-  * working directory), TWO gates run. Median gate (`"regressions"`): a
+  * (SPARK_GRAFT_BENCH_PREV=<file>, else BENCH_FULL.json, else the highest
+  * BENCH_r*.json in the working directory) and recorded this run's `sf`
+  * (compared by directory name), TWO gates run. A baseline of another
+  * scale factor is set aside with one `[bench]` stderr line: both tables
+  * stay `{}` and the canary factor stays 1. Median gate (`"regressions"`): a
   * query is flagged only when BOTH its median and its best-of-N are slower
   * than 1.5x the previous median by >0.3s absolute — a real plan
   * regression slows every rep, concurrent load rarely does (the r4–r6
@@ -138,6 +141,25 @@ object Bench {
     * which disables the min gate rather than fabricating a baseline). */
   private[graft] def previousMins(text: String): Map[String, Double] =
     previousMap(text, "queries_min")
+
+  /** The `sf` (scale-factor directory) a previous artifact recorded, in
+    * either artifact shape. */
+  private[graft] def previousSf(text: String): Option[String] =
+    "\"sf\":\\s*\"([^\"]*)\"".r
+      .findFirstMatchIn(text.replace("\\\"", "\"")).map(_.group(1))
+
+  /** A previous artifact as this run's baseline only when it ran the same
+    * scale factor (compared by directory name); otherwise the reason it
+    * was set aside, naming both values. */
+  private[graft] def sameScaleBaseline(text: String,
+                                       sfDir: String): Either[String, String] = {
+    val name = (d: String) => new java.io.File(d).getName
+    previousSf(text) match {
+      case Some(p) if name(p) == name(sfDir) => Right(text)
+      case p => Left(s"[bench] previous artifact sf=${p.getOrElse("unrecorded")}" +
+        s" differs from this run's sf=$sfDir: no regression gate, no canary factor")
+    }
+  }
 
   /** Canary-normalized gate scaling as a pure seam: this run's opening
     * canary over the PREVIOUS artifact's quietest values, compared
@@ -386,6 +408,7 @@ object Bench {
     val prevText = previousBenchFile()
       .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath),
         java.nio.charset.StandardCharsets.UTF_8))
+      .flatMap(t => sameScaleBaseline(t, sfDir).left.map(System.err.println).toOption)
     val prev = prevText.map(previousMedians).getOrElse(Map.empty)
     val prevMin = prevText.map(previousMins).getOrElse(Map.empty)
     val curMed = ok.map { case (name, (med, _, _)) => name -> med }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.HashFamily
 
 import graft.functions.GraftFunctions._
 import graft.operators.{Dedup, GroupedMode, LinkAlign, Multimodal, Similarity, TextAnalysis}
@@ -1374,8 +1375,9 @@ object SparkEntry {
     // EXACT ORACLE (r16): the DuckDB twin replays the WHOLE xxhash64
     // machinery — token hashes (XxhSql string recursion), ShingleHashes'
     // 2-fold hashLong chains, MinHashSignature's salted hashLong minima
-    // (salts from the SAME XXH64.hashInt generator the kernel uses), the
-    // lshBands bucket hash (per-band seed + joined-decimal-string hash),
+    // (salts from the SAME XXH64.hashInt generator the kernel uses), a
+    // band bucket hash (per-band seed + joined-decimal-string hash) that
+    // groups the same sets as the engine's raw-slice band keys,
     // exact-Jaccard confirm and group expansion
     "dedup_minhash_lsh" -> ((s, dir) =>
       Dedup.minhashLshPairsFromGroups(
@@ -1394,22 +1396,25 @@ object SparkEntry {
         maxHamming = 3)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long"))),
 
-    // Portable-hash twins of the two signature machines (md5-derived
-    // integers both engines compute identically): the simhash/minhash
-    // MATH gets a full hash oracle that the xxhash64 fingerprints can't
+    // The two signature machines under the md5 hash family (md5-derived
+    // integers any engine computes identically): the simhash/minhash
+    // MATH replays in plain SQL, without the XXH64 recursion
     "dedup_simhash_md5" -> ((s, dir) =>
-      Dedup.simhashMd5Signatures(t(s, dir, "documents"), "doc_id", "text")),
+      Dedup.simhash(t(s, dir, "documents"), "doc_id", "text", HashFamily.Md5)
+        .withColumnRenamed("simhash", "simhash60")),
 
     "dedup_minhash_md5" -> ((s, dir) =>
-      Dedup.minhashMd5Signatures(t(s, dir, "documents"), "doc_id", "text",
-        k = 2, numHashes = 32)),
+      Dedup.minhashSignatures(t(s, dir, "documents"), "doc_id", "text",
+        k = 2, numHashes = 32, HashFamily.Md5)),
 
-    // The full LSH pair machinery in the PORTABLE hash space: band keys
-    // are raw 4-min tuples, verify on shingle strings — hash-oracled end
-    // to end, the GREEN form of the rows-only dedup_minhash_lsh
+    // dedup_minhash_lsh's pipeline under the md5 family
     "dedup_minhash_md5_lsh" -> ((s, dir) =>
-      Dedup.minhashMd5LshPairs(t(s, dir, "documents"), "doc_id", "text",
-        k = 2, numHashes = 32, bands = 8, minJaccard = 0.8)),
+      Dedup.minhashLshPairsFromGroups(
+        Dedup.shingleGroupsFor(t(s, dir, "documents"), "doc_id", "text",
+          k = 2, key = dir, HashFamily.Md5),
+        numHashes = 32, bands = 8, minJaccard = 0.8, family = HashFamily.Md5)
+        .select(col("id_a"), col("id_b"), col("intersection").cast("long"),
+          col("union_size").cast("long"))),
 
     // Measured LSH recall per Jaccard decile vs the exact pair relation
     // — the corpus' own s-curve; threshold 0.7 so the curve has a tail
@@ -2199,15 +2204,15 @@ object SparkEntry {
         "doc_id", "text", k = 12, w = 8)
     }),
 
-    // The hashed-key decontamination dataflow under the FULL oracle gate:
-    // grams travel as portable md5-prefix keys (any engine computes the
-    // same 16 hex chars), so broadcast-probe-aggregate is hash-replayable
+    // decontaminate_hashed under the md5 hash family: grams travel as
+    // portable md5-prefix keys (any engine computes the same 64 bits), so
+    // broadcast-probe-aggregate is hash-replayable
     "decontaminate_md5keys" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      graft.operators.Decontamination.contaminationMd5Keys(
+      graft.operators.Decontamination.contaminationHashed(
         docs.where(pmod(col("doc_id"), lit(50)) =!= 7),
         docs.where(pmod(col("doc_id"), lit(50)) === 7),
-        "doc_id", "text", 4)
+        "doc_id", "text", 4, HashFamily.Md5)
     }),
 
     // Corpus curation funnel: quality -> repetition -> pii -> langid in

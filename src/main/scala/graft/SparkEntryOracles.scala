@@ -314,7 +314,7 @@ private[graft] object SparkEntryOracles {
     * 4-min tuple (no bucket hashing — exact equality, like the engine).
     * Composes with [[shingleCtesFrom]]'s `ex`/`sizes` for the verify. */
   private lazy val lshCandCtes: String = {
-    val mins = graft.operators.Dedup.minhashMd5Consts(32).zipWithIndex
+    val mins = org.apache.spark.sql.graft.MinHashSignature.md5Consts(32).zipWithIndex
       .map { case ((a, b), i) =>
         s"CAST(min((h * $a + $b) % 2147483647) AS BIGINT) AS m$i" }
       .mkString(",\n    ")
@@ -7392,9 +7392,10 @@ private[graft] object SparkEntryOracles {
     // per-doc distinct sorted sets collapse to groups; MinHashSignature =
     // per-salt hashLong minima over set elements (salts from the SAME
     // XXH64.hashInt generator the kernel reads — they cannot drift);
-    // lshBands' bucket = xxhash64(band, joined decimal strings) replayed
-    // with a per-row seed recursion; candidates from shared (band,
-    // bucket), exact-Jaccard >= 0.8 confirm on the hash sets, member
+    // band bucket = xxhash64(band, joined decimal strings) replayed with
+    // a per-row seed recursion (the engine keys bands by the raw slice;
+    // both group the same sets unless two slices collide in 64 bits);
+    // candidates from shared (band, bucket), exact-Jaccard >= 0.8 confirm on the hash sets, member
     // expansion + intra pairs. Signed/unsigned forms tracked explicitly:
     // minima compare SIGNED longs (the kernel's Long compare), hashes
     // compute in unsigned HUGEINT
@@ -7502,7 +7503,7 @@ private[graft] object SparkEntryOracles {
     // minhash-md5 twin: the (a, b) constants come from the SAME Scala
     // generator the Spark plan uses — the literals can't drift
     "dedup_minhash_md5" -> {
-      val mins = graft.operators.Dedup.minhashMd5Consts(32).zipWithIndex
+      val mins = org.apache.spark.sql.graft.MinHashSignature.md5Consts(32).zipWithIndex
         .map { case ((a, b), i) =>
           s"CAST(min((h * $a + $b) % 2147483647) AS BIGINT) AS m$i" }
         .mkString(",\n    ")

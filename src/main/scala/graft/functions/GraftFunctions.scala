@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{CosineSimilarity, HanCount, Int8Codes, Int8Cosine, MinHashSignature, NfkcNormalize, RepetitionSignals, ShingleHashes, Shingles}
+import org.apache.spark.sql.graft.{CosineSimilarity, HanCount, HashFamily, Int8Codes, Int8Cosine, MinHashSignature, NfkcNormalize, RepetitionSignals, ShingleHashes, Shingles}
 
 /** The engine's scalar-function surface: every cleansing / normalization
   * expression of the reference system re-expressed as a `Column => Column`
@@ -264,10 +264,11 @@ object GraftFunctions {
     * building, long join keys instead of text. Custom codegen-called
     * expression ([[org.apache.spark.sql.graft.ShingleHashes]]); this stage
     * fronts every dedup operator. Use when shingle identity (not content)
-    * is all that matters. */
-  def shingleHashes(c: Column, k: Int): Column =
+    * is all that matters; `family` picks the hash ([[HashFamily]]). */
+  def shingleHashes(c: Column, k: Int,
+                    family: HashFamily = HashFamily.Xxh64): Column =
     GraftBridge.column(
-      ShingleHashes(GraftBridge.expression(tokens(c)), k))
+      ShingleHashes(GraftBridge.expression(tokens(c)), k, family))
 
   /** |A ∩ B| of two SORTED long arrays by a codegen'd merge walk — the
     * dedup confirm-join inner loop; replaces `size(array_intersect)`
@@ -298,35 +299,18 @@ object GraftFunctions {
     GraftBridge.column(org.apache.spark.sql.graft.DotProductLong(
       GraftBridge.expression(a), GraftBridge.expression(b)))
 
-  /** One MinHash value: min over shingles of a seeded 64-bit hash. Seeding
-    * is done by prepending the seed to the hashed tuple, so each of the n
-    * signature positions is an independent permutation approximation. */
-  def minhash(shingleCol: Column, seed: Int): Column =
-    array_min(transform(shingleCol, s => xxhash64(lit(seed), s)))
-
   /** Full n-position MinHash signature of HASHED shingles (see
     * [[shingleHashes]]) as array<long> — a custom codegen'd Catalyst
     * expression ([[org.apache.spark.sql.graft.MinHashSignature]]): one
     * primitive long loop per row. The signature pass is numHashes×|set|
     * hash evals per document and dominates LSH dedup at corpus scale, so it
     * must not run as interpreted higher-order functions (those cost ~10x
-    * here and allocate per shingle). */
-  def minhashSignature(shingleCol: Column, n: Int): Column =
+    * here and allocate per shingle). `family` must match the one that
+    * hashed the shingles. */
+  def minhashSignature(shingleCol: Column, n: Int,
+                       family: HashFamily = HashFamily.Xxh64): Column =
     GraftBridge.column(
-      MinHashSignature(GraftBridge.expression(shingleCol), n))
-
-  /** LSH band hashes: split an n-hash signature into `bands` bands of
-    * n/bands rows each; two documents collide in a band iff that slice of
-    * their signatures is identical. Emits array<struct<band:int,bucket:long>>
-    * ready to explode into a bucket-join. */
-  def lshBands(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(
-        lit(b).as("band"),
-        xxhash64(lit(b), array_join(
-          transform(slice(signature, b * rowsPerBand + 1, rowsPerBand),
-            h => h.cast("string")), ",")).as("bucket"))
-    }: _*)
+      MinHashSignature(GraftBridge.expression(shingleCol), n, family))
 
   /** Deterministic document fingerprint (content hash of normalized text). */
   def fingerprint(c: Column): Column = md5(normalizeText(c).cast("binary"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.HashFamily
 
 import graft.functions.GraftFunctions.{shingleHashes, shingles}
 
@@ -102,46 +103,25 @@ object Decontamination {
           col("n_grams") * thresholdPct).cast("long").as("contaminated"))
   }
 
-  /** Same contract at the 64-bit-hash level: grams travel as xxhash64
-    * shingle hashes (codegen'd [[org.apache.spark.sql.graft.ShingleHashes]],
+  /** Same contract at the 64-bit-hash level: grams travel as shingle
+    * hashes (codegen'd [[org.apache.spark.sql.graft.ShingleHashes]],
     * per-doc distinct), so the broadcast table and the probe keys are
     * longs, not sentence-length strings. Emits `(id, n_distinct_hits)` —
     * equal to [[contamination]]'s `n_distinct_hits` up to 64-bit hash
-    * collisions (equality is spec-pinned on the test corpus). */
+    * collisions (equality is spec-pinned on the test corpus). XXH64 is the
+    * at-scale default; under `HashFamily.Md5` a gram's key is its 16-hex
+    * md5 prefix as a number, which any engine computes identically, so
+    * the pass is hash-oracle-replayable end to end. */
   def contaminationHashed(corpus: DataFrame, benchmark: DataFrame,
-                          idCol: String, textCol: String, n: Int): DataFrame = {
+                          idCol: String, textCol: String, n: Int,
+                          family: HashFamily = HashFamily.Xxh64): DataFrame = {
     val bench = benchmark
-      .select(explode(shingleHashes(col(textCol), n)).as("gh")).distinct()
+      .select(explode(shingleHashes(col(textCol), n, family)).as("gh")).distinct()
     corpus
-      .select(col(idCol), explode(shingleHashes(col(textCol), n)).as("gh"))
+      .select(col(idCol), explode(shingleHashes(col(textCol), n, family)).as("gh"))
       .join(broadcast(bench), "gh")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_distinct_hits"))
-  }
-
-  /** The hashed-key dataflow of [[contaminationHashed]] with an
-    * ENGINE-PORTABLE key: grams travel as the first 16 hex chars of their
-    * md5 (64 bits of a hash any engine computes identically on the same
-    * UTF-8 bytes), so the broadcast-probe-aggregate pipeline is
-    * hash-oracle-replayable end to end while still shipping fixed-width
-    * keys instead of sentence-length gram strings. xxhash64
-    * ([[contaminationHashed]]) stays the at-scale default — one codegen'd
-    * long per gram beats a 16-byte string — this variant exists so the
-    * hashed dataflow itself sits under the full correctness gate.
-    * Emits `(id, n_distinct_hits)`, equal to [[contamination]]'s column
-    * up to 64-bit collisions. */
-  def contaminationMd5Keys(corpus: DataFrame, benchmark: DataFrame,
-                           idCol: String, textCol: String, n: Int): DataFrame = {
-    def key(gram: Column): Column = substring(md5(gram.cast("binary")), 1, 16)
-    val bench = benchmark
-      .select(explode(shingles(col(textCol), n)).as("gram"))
-      .select(key(col("gram")).as("gk")).distinct()
-    corpus
-      .select(col(idCol), explode(shingles(col(textCol), n)).as("gram"))
-      .select(col(idCol), key(col("gram")).as("gk"))
-      .join(broadcast(bench), "gk")
-      .groupBy(col(idCol))
-      .agg(countDistinct(col("gk")).as("n_distinct_hits"))
   }
 
   /** SEMANTIC decontamination: a corpus row is contaminated iff some

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.graft.HashFamily
+
 import graft.functions.GraftFunctions._
 import graft.{Fixpoint, Observed}
 import graft.Checkpoints.PinOps
@@ -396,17 +398,19 @@ object Dedup {
     * deterministic for a given corpus, so a cache hit is equivalent to a
     * recompute). Session binding + dead-session eviction: see
     * [[graft.SessionMemo]]. */
-  private val groupsCache = new graft.SessionMemo[(String, Int), DataFrame]()
+  private val groupsCache =
+    new graft.SessionMemo[(String, Int, HashFamily), DataFrame]()
 
   /** The [[shingleGroups]] collapse for `docs` under dataset key `key`,
-    * computed and eagerly checkpointed at most once per (session, key, k)
-    * per JVM. `key` must uniquely identify the input dataset (e.g. its
-    * directory) — different docs under the same key would silently reuse
-    * the first collapse. */
+    * computed and eagerly checkpointed at most once per (session, key, k,
+    * family) per JVM. `key` must uniquely identify the input dataset (e.g.
+    * its directory) — different docs under the same key would silently
+    * reuse the first collapse. */
   def shingleGroupsFor(docs: DataFrame, idCol: String, textCol: String,
-                       k: Int, key: String): DataFrame =
-    groupsCache.getOrCompute(docs.sparkSession, (key, k))(
-      shingleGroups(docs, idCol, textCol, k).pin())
+                       k: Int, key: String,
+                       family: HashFamily = HashFamily.Xxh64): DataFrame =
+    groupsCache.getOrCompute(docs.sparkSession, (key, k, family))(
+      shingleGroups(docs, idCol, textCol, k, family).pin())
 
   /** Per-JVM cache of near-dup CLUSTER tables: the n-gram Jaccard pairs +
     * [[connectedComponents]] loop, run at most once per (session, key, k,
@@ -519,32 +523,38 @@ object Dedup {
   /** The exact-collapse table (key = sorted distinct shingle-hash set,
     * ids = members, rep = min id, n_same = |ids|): the materialization
     * point for corpus-scale dedup — persist this once (one scan + one
-    * aggregation) and feed it to [[minhashLshPairsFromGroups]]. */
+    * aggregation) and feed it to [[minhashLshPairsFromGroups]] with the
+    * same `family`. */
   def shingleGroups(docs: DataFrame, idCol: String, textCol: String,
-                    k: Int): DataFrame = {
+                    k: Int, family: HashFamily = HashFamily.Xxh64): DataFrame = {
     // shingle identity only -> hashed shingles: signatures minhash the
     // 64-bit shingle hashes and the exact-confirm join intersects long
     // arrays, so no shingle string is ever built or shuffled
     val withSets = docs
       .select(col(idCol).as("doc"),
-        sort_array(shingleHashes(col(textCol), k)).as("sh"))
+        sort_array(shingleHashes(col(textCol), k, family)).as("sh"))
       .where(size(col("sh")) > 0)
     collapseBy(withSets, col("sh"))
   }
 
   /** [[minhashLshPairs]] over a pre-collapsed (possibly persisted)
-    * [[shingleGroups]] table. */
+    * [[shingleGroups]] table of the same `family`. A band's key is its raw
+    * rows-per-band slice of the signature, so two sets share a bucket iff
+    * they agree on that whole slice. Output: (id_a < id_b, intersection,
+    * union_size) for verified pairs with Jaccard ≥ `minJaccard`; the
+    * bucket cap's observed metric is `minhash<suffix>_lsh_buckets`. */
   def minhashLshPairsFromGroups(groups: DataFrame, numHashes: Int,
                                 bands: Int, minJaccard: Double,
-                                maxBucket: Int = 10000): DataFrame = {
+                                maxBucket: Int = 10000,
+                                family: HashFamily = HashFamily.Xxh64): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rows = numHashes / bands
-    // Materialize the signature ONCE before banding: lshBands slices the
-    // signature `bands` times, and feeding it the raw minhash expression
-    // would duplicate the whole numHashes-fold computation per band
-    // (measured 30x slowdown on the bench before this split).
+    // Materialize the signature ONCE before banding: each band slices it,
+    // and feeding the slices the raw minhash expression would duplicate
+    // the whole numHashes-fold computation per band (measured 30x
+    // slowdown on the bench before this split).
     val sig = groups.select(col("rep").as("doc"), col("key").as("sh"),
-      minhashSignature(col("key"), numHashes).as("sig"))
+      minhashSignature(col("key"), numHashes, family).as("sig"))
     // The shingle set rides along INTO the buckets so the exact-confirm
     // step intersects arrays already present in the pair row — the
     // alternative (join candidate ids back to a sets table) re-runs the
@@ -554,13 +564,15 @@ object Dedup {
     // trade: sets travel once per band, one row per DISTINCT set.
     val buckets = sig
       .select(struct(col("doc"), col("sh")).as("ds"),
-        explode(lshBands(col("sig"), bands, rows)).as("b"))
+        explode(array((0 until bands).map(b =>
+          struct(lit(b).as("band"),
+            slice(col("sig"), b * rows + 1, rows).as("bucket"))): _*)).as("b"))
       .select(col("ds"), col("b.band").as("band"), col("b.bucket").as("bucket"))
     val repPairs = capBuckets(
       buckets
         .groupBy("band", "bucket").agg(collect_list(col("ds")).as("ms"))
         .where(size(col("ms")) > 1),
-      maxBucket, "minhash_lsh_buckets")
+      maxBucket, s"minhash${family.suffix}_lsh_buckets")
       .select(explode(col("ms")).as("a"), col("ms"))
       .select(col("a"), explode(col("ms")).as("b"))
       .where(col("a.doc") < col("b.doc"))
@@ -586,181 +598,66 @@ object Dedup {
       // distinct moves only the (id, id, n) survivor rows. Identical
       // output: intersection is a function of the pair.
       .distinct()
-    val memb = groups.select(col("rep"), explode(col("ids")).as("m"))
+    // set sizes ride the member tables, so a caller that drops
+    // union_size prunes them away
+    val memb = groups.select(col("rep"), size(col("key")).as("sz"),
+      explode(col("ids")).as("m"))
     val cross = repPairs
-      .join(memb.select(col("rep").as("id_a"), col("m").as("ma")), "id_a")
-      .join(memb.select(col("rep").as("id_b"), col("m").as("mb")), "id_b")
+      .join(memb.select(col("rep").as("id_a"), col("sz").as("sa"),
+        col("m").as("ma")), "id_a")
+      .join(memb.select(col("rep").as("id_b"), col("sz").as("sb"),
+        col("m").as("mb")), "id_b")
       .select(least(col("ma"), col("mb")).as("id_a"),
-        greatest(col("ma"), col("mb")).as("id_b"), col("intersection"))
-    val intra = intraPairs(groups, Seq("intersection" -> size(col("key"))))
+        greatest(col("ma"), col("mb")).as("id_b"), col("intersection"),
+        (col("sa") + col("sb") - col("intersection")).as("union_size"))
+    val intra = intraPairs(groups, Seq("intersection" -> size(col("key")),
+      "union_size" -> size(col("key"))))
     cross.unionByName(intra)
   }
 
-  /** 64-bit SimHash per document, computed entirely row-local as a custom
+  /** SimHash per document, computed entirely row-local as a custom
     * codegen'd expression ([[org.apache.spark.sql.graft.SimHash64]]):
-    * tokens → per-token 64-bit hash → signed bit votes → sign bits packed
-    * into a long, in one primitive loop. Zero shuffles for the fingerprint
-    * itself. */
-  def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-      org.apache.spark.sql.GraftBridge.column(
-        org.apache.spark.sql.graft.SimHash64(
-          org.apache.spark.sql.GraftBridge.expression(tokens(col(textCol)))))
-        .as("simhash"))
-
-  /** PORTABLE-hash SimHash signatures — the oracle twin of [[simhash]]'s
-    * xxhash64 machinery, with the per-token hash swapped for the first 60
-    * bits of md5 (a hash both Spark and the SQL oracle compute
-    * identically, the `text_fingerprints_md5` pattern): token → 60-bit
-    * integer, signed bit votes, sign bits packed into one long. Same
-    * zero-shuffle scale shape per document (one explode + one grouped
-    * integer aggregation); exists so the simhash MATH gets a full hash
-    * oracle, which the engine-specific fingerprint can't. Ties (vote sum
-    * 0) resolve to bit 0. Docs with no tokens are absent. */
-  def simhashMd5Signatures(docs: DataFrame, idCol: String, textCol: String,
-                           bits: Int = 60): DataFrame = {
-    require(bits >= 1 && bits <= 60, "md5 prefix provides up to 60 bits")
-    // tokenize + per-token md5 is the map-side cost; fan small scans out
-    // so it doesn't run single-task (graft.Fanout — identity on
-    // multi-split data; the doc-key agg shuffles regardless)
-    val toks = graft.Fanout.maybe(docs, idCol)
-      .where(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"),
-        explode(tokens(col(textCol))).as("t"))
-      .where(col("t") =!= "")
-      .select(col("doc_id"),
-        conv(substring(md5(col("t")), 1, 15), 16, 10).cast("long").as("h"))
-    val voteCols = (0 until bits).map(i =>
-      sum(when(shiftright(col("h"), i).bitwiseAND(lit(1L)) === 1L, 1L)
-        .otherwise(-1L)).as(s"_b$i"))
-    toks.groupBy("doc_id").agg(voteCols.head, voteCols.tail: _*)
-      .select(col("doc_id"),
-        (0 until bits).map(i =>
-          when(col(s"_b$i") > 0, lit(1L << i)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash60"))
+    * tokens → per-token hash → signed bit votes → sign bits packed into a
+    * long, in one primitive loop. Zero shuffles for the fingerprint
+    * itself. Under `HashFamily.Md5` the fingerprint has 60 bits and docs
+    * with no tokens are absent. */
+  def simhash(docs: DataFrame, idCol: String, textCol: String,
+              family: HashFamily = HashFamily.Xxh64): DataFrame = {
+    val fp = org.apache.spark.sql.GraftBridge.column(
+      org.apache.spark.sql.graft.SimHash64(
+        org.apache.spark.sql.GraftBridge.expression(tokens(col(textCol))), family))
+    if (family == HashFamily.Xxh64)
+      docs.select(col(idCol).as("doc_id"), fp.as("simhash"))
+    else nonNull(docs, col(idCol).as("doc_id"), fp, "simhash")
   }
 
-  /** Deterministic universal-hash constants for [[minhashMd5Signatures]]:
-    * (a_i, b_i) for h_i(x) = (a_i·x + b_i) mod p with p = 2^31 − 1. One
-    * generator — [[org.apache.spark.sql.graft.MinHashMd5Signature.consts]]
-    * — feeds the kernel, this Spark plan AND the SQL oracle's literals,
-    * so the three can never drift. a_i is forced nonzero. */
-  def minhashMd5Consts(n: Int): Seq[(Long, Long)] =
-    org.apache.spark.sql.graft.MinHashMd5Signature.consts(n)
+  /** (`keep`, `c` as `name`) for the rows of `df` where `c` is not null,
+    * `c` evaluated once per row: a filter on a projected kernel is pushed
+    * below the projection and runs the kernel a second time, while a
+    * filter on a generator's output stays above it. */
+  private def nonNull(df: DataFrame, keep: Column, c: Column,
+                      name: String): DataFrame =
+    df.select(keep, explode(array(c)).as(name)).where(col(name).isNotNull)
 
-  /** PORTABLE-hash MinHash signatures (wide: m0..m{n−1} per document):
-    * word-k-shingles → 28-bit md5-prefix integers → n independent
-    * (a·x + b) mod p minima, all inside ONE codegen-called kernel
-    * ([[org.apache.spark.sql.graft.MinHashMd5Signature]]) — the oracle
-    * twin of the xxhash64 [[GraftFunctions.minhashSignature]]. The old
-    * dataflow exploded distinct shingles and min-AGGREGATED n columns
-    * back per doc: a row blowup plus a shuffle for row-local arithmetic.
-    * Scale shape now: a pure fanned scan, zero exchanges. Docs with
-    * < k tokens are absent (the kernel returns NULL; filtered). */
-  def minhashMd5Signatures(docs: DataFrame, idCol: String, textCol: String,
-                           k: Int = 2, numHashes: Int = 32): DataFrame = {
-    val sig = org.apache.spark.sql.GraftBridge.column(
-      org.apache.spark.sql.graft.MinHashMd5Signature(
-        org.apache.spark.sql.GraftBridge.expression(
-          shingles(col(textCol), k)), numHashes))
-    graft.Fanout.maybe(docs, idCol)
-      .where(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"), sig.as("_sig"))
-      .where(col("_sig").isNotNull)
+  /** MinHash signatures, wide (m0..m{n−1} per document): word-k-shingle
+    * hashes and their n minima in two codegen'd kernels
+    * ([[shingleHashes]], [[minhashSignature]]) of one `family`. Scale
+    * shape: a fanned scan, zero exchanges. Docs with a null signature
+    * (null text; under `HashFamily.Md5` also < k tokens) are absent. */
+  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
+                        k: Int = 2, numHashes: Int = 32,
+                        family: HashFamily = HashFamily.Xxh64): DataFrame =
+    nonNull(graft.Fanout.maybe(docs, idCol), col(idCol).as("doc_id"),
+      minhashSignature(shingleHashes(col(textCol), k, family), numHashes,
+        family), "_sig")
       .select(col("doc_id") +: (0 until numHashes).map(i =>
-        expr(s"_sig[$i]").as(s"m$i")): _*)
-  }
-
-  /** MinHash-LSH pair enumeration in the PORTABLE md5-hash space — the
-    * hash-oracled form of [[minhashLshPairsFromGroups]]: signatures come
-    * from [[org.apache.spark.sql.graft.MinHashMd5Signature]] (the green
-    * `dedup_minhash_md5` kernel), band keys are the RAW rows-per-band
-    * min tuples (exact equality grouping — no bucket hashing, so a hash
-    * collision can never invent a candidate the SQL replay lacks), and
-    * the exact-Jaccard confirm runs on the shingle STRING sets
-    * (`array_intersect` — byte-identical to the oracle's list
-    * intersection, no xxhash-collision caveat). Identical shingle sets
-    * exact-collapse first (clone-adversarial, the house rule); banding
-    * runs on representatives only — sound because a signature is a
-    * function of the SET, so per-member banding would collide
-    * identically.
-    *
-    * Scale shape: one collapse aggregation, one bands-way explode of the
-    * DISTINCT-set table, per-bucket pair generation capped at
-    * `maxBucket` (observed metric `minhash_md5_lsh_buckets`), member
-    * expansion restores clone pairs. Output: (id_a < id_b,
-    * intersection, union_size) for verified pairs with Jaccard ≥
-    * `minJaccard`. */
-  def minhashMd5LshPairs(docs: DataFrame, idCol: String, textCol: String,
-                         k: Int = 2, numHashes: Int = 32, bands: Int = 8,
-                         minJaccard: Double = 0.8,
-                         maxBucket: Int = 10000): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
-    val sets = docs
-      .where(col(textCol).isNotNull)
-      .select(col(idCol).as("doc"),
-        sort_array(array_distinct(shingles(col(textCol), k))).as("shs"))
-      .where(size(col("shs")) > 0)
-    val groups = sets.groupBy(col("shs"))
-      .agg(min(col("doc")).as("rep"), collect_list(col("doc")).as("ids"))
-      .pinLazy() // three consumers: banding, member expansion, intra
-    val sig = groups.select(col("rep"), col("shs"),
-      org.apache.spark.sql.GraftBridge.column(
-        org.apache.spark.sql.graft.MinHashMd5Signature(
-          org.apache.spark.sql.GraftBridge.expression(col("shs")),
-          numHashes)).as("sig"))
-    val banded = sig
-      .select(struct(col("rep"), col("shs")).as("ds"),
-        explode(array((0 until bands).map(b =>
-          struct(lit(b).as("band"),
-            slice(col("sig"), b * rows + 1, rows).as("key"))): _*)).as("bk"))
-      .select(col("ds"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val repPairs = capBuckets(
-      banded.groupBy("band", "key").agg(collect_list(col("ds")).as("ms"))
-        .where(size(col("ms")) > 1),
-      maxBucket, "minhash_md5_lsh_buckets")
-      .select(explode(col("ms")).as("a"), col("ms"))
-      .select(col("a"), explode(col("ms")).as("b"))
-      .where(col("a.rep") < col("b.rep"))
-      .select(col("a.rep").as("ra"), col("b.rep").as("rb"),
-        col("a.shs").as("sh_a"), col("b.shs").as("sh_b"))
-      .withColumn("intersection",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("union_size",
-        size(col("sh_a")).cast("long") + size(col("sh_b")).cast("long")
-          - col("intersection"))
-      .where(col("intersection") / col("union_size") >= minJaccard)
-      .select("ra", "rb", "intersection", "union_size")
-      // dedup AFTER the verify (r18, the containment move): the old
-      // band-level dropDuplicates exchanged every candidate row with
-      // BOTH string shingle arrays aboard just to avoid re-verifying a
-      // pair that collided in several bands; verifying the few
-      // collisions costs less than shuffling the arrays, and the
-      // distinct now moves only (id, id, n, n) survivor rows. Identical
-      // output: intersection/union are functions of the pair.
-      .distinct()
-    val memb = groups.select(col("rep"), explode(col("ids")).as("m"))
-    val cross = repPairs
-      .join(memb.select(col("rep").as("ra"), col("m").as("ma")), "ra")
-      .join(memb.select(col("rep").as("rb"), col("m").as("mb")), "rb")
-      .select(least(col("ma"), col("mb")).as("id_a"),
-        greatest(col("ma"), col("mb")).as("id_b"),
-        col("intersection"), col("union_size"))
-    val intra = groups.where(size(col("ids")) > 1)
-      .select(size(col("shs")).cast("long").as("sz"),
-        explode(col("ids")).as("a"), col("ids"))
-      .select(col("sz"), col("a"), explode(col("ids")).as("b"))
-      .where(col("a") < col("b"))
-      .select(col("a").as("id_a"), col("b").as("id_b"),
-        col("sz").as("intersection"), col("sz").as("union_size"))
-    cross.unionByName(intra)
-  }
+        col("_sig").getItem(i).as(s"m$i")): _*)
 
   /** Measured LSH recall curve: for every EXACT Jaccard-≥-`minJaccard`
     * pair ([[ngramPairsFor]] — the green all-pairs relation), was it
     * FOUND by the banded md5-MinHash candidate generation
-    * ([[minhashMd5LshPairs]] at the same threshold)? Rolled up per
+    * ([[minhashLshPairsFromGroups]] under `HashFamily.Md5`, same
+    * threshold)? Rolled up per
     * Jaccard decile as (n_exact, n_found, recall_ppm) — the measured
     * form of the 1−(1−J^r)^b s-curve every LSH parameter choice is
     * betting on, over the corpus' own pair distribution instead of the
@@ -777,8 +674,9 @@ object Dedup {
         col("intersection").cast("long").as("i"),
         (col("size_a") + col("size_b") - col("intersection"))
           .cast("long").as("u"))
-    val found = minhashMd5LshPairs(docs, idCol, textCol, k, numHashes,
-      bands, minJaccard)
+    val found = minhashLshPairsFromGroups(
+      shingleGroupsFor(docs, idCol, textCol, k, key, HashFamily.Md5),
+      numHashes, bands, minJaccard, family = HashFamily.Md5)
       .select(col("id_a"), col("id_b"), lit(1L).as("found"))
     exact.join(found, Seq("id_a", "id_b"), "left_outer")
       .withColumn("jacc_decile", least(lit(9L), expr("(i * 10) div u")))

@@ -13,6 +13,12 @@ import org.apache.spark.sql.functions._
   * assignment when the corpus grows. */
 object Sampling {
 
+  /** The ENGINE-PORTABLE order key: the first 8 hex chars of
+    * md5(salt ‖ key), compared lexicographically (any engine with md5
+    * replays it). */
+  private def md5Prefix(salt: String, key: Column): Column =
+    substring(md5(concat(lit(salt), key.cast("string")).cast("binary")), 1, 8)
+
   /** Uniform bucket in [0, buckets) from (id, salt). */
   private def bucket(id: Column, salt: String, buckets: Int): Column =
     pmod(xxhash64(lit(salt), id), lit(buckets.toLong)).cast("int")
@@ -43,8 +49,7 @@ object Sampling {
                   salt: String = "split"): Column = {
     require(weights.nonEmpty && weights.forall(_._2 > 0), "positive weights")
     val total = weights.map(_._2).sum
-    val prefix = substring(md5(concat(lit(salt),
-      key.cast("string")).cast("binary")), 1, 8)
+    val prefix = md5Prefix(salt, key)
     val cuts = weights.scanLeft(0)(_ + _._2).tail
     weights.init.zip(cuts.init)
       .foldRight(lit(weights.last._1): Column) {
@@ -87,8 +92,7 @@ object Sampling {
                        salt: String = "strata"): DataFrame = {
     require(fractions.values.forall(f => f >= 0 && f <= 1),
       "fractions in [0,1]")
-    val prefix = substring(md5(concat(lit(salt),
-      col(idCol).cast("string")).cast("binary")), 1, 8)
+    val prefix = md5Prefix(salt, col(idCol))
     val keep = fractions.foldLeft(lit(true)) { case (acc, (stratum, f)) =>
       when(col(stratumCol) === stratum, prefix < hexThreshold(f)).otherwise(acc)
     }
@@ -109,8 +113,7 @@ object Sampling {
                     rates: Map[String, Double],
                     salt: String = "mix"): DataFrame = {
     require(rates.values.forall(r => r >= 0 && r <= 1), "rates in [0,1]")
-    val prefix = substring(md5(concat(lit(salt),
-      col(idCol).cast("string")).cast("binary")), 1, 8)
+    val prefix = md5Prefix(salt, col(idCol))
     val keep = rates.foldLeft(lit(false)) { case (acc, (g, r)) =>
       when(col(groupCol) === g, prefix < hexThreshold(r)).otherwise(acc)
     }
@@ -135,8 +138,7 @@ object Sampling {
   def sampleFixedK(df: DataFrame, idCol: String, k: Int,
                    salt: String = "fixk"): DataFrame = {
     require(k > 0, "k must be positive")
-    val prefix = substring(md5(concat(lit(salt),
-      col(idCol).cast("string")).cast("binary")), 1, 8)
+    val prefix = md5Prefix(salt, col(idCol))
     df.orderBy(prefix.asc, col(idCol).asc).limit(k)
   }
 
@@ -151,8 +153,7 @@ object Sampling {
     * generalized from per-group rates to per-row weights. */
   def weightedSample(df: DataFrame, idCol: String, probCol: Column,
                      salt: String = "wsamp"): DataFrame = {
-    val u32 = conv(substring(md5(concat(lit(salt),
-      col(idCol).cast("string")).cast("binary")), 1, 8), 16, 10).cast("long")
+    val u32 = conv(md5Prefix(salt, col(idCol)), 16, 10).cast("long")
     val p = least(lit(1.0), greatest(lit(0.0), probCol.cast("double")))
     df.where(u32 < floor(p * lit(4294967296.0)).cast("long"))
   }
@@ -175,8 +176,7 @@ object Sampling {
   def capPerGroup(df: DataFrame, idCol: String, groupCol: String,
                   cap: Int, salt: String = "cap"): DataFrame = {
     require(cap > 0, "cap must be positive")
-    val prefix = substring(md5(concat(lit(salt),
-      col(idCol).cast("string")).cast("binary")), 1, 8)
+    val prefix = md5Prefix(salt, col(idCol))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(groupCol).orderBy(prefix.asc, col(idCol).asc)
     df.withColumn("_cap_rn", row_number().over(w))
@@ -200,8 +200,7 @@ object Sampling {
                         tokensCol: String, budget: Long,
                         salt: String = "captok"): DataFrame = {
     require(budget > 0, "budget must be positive")
-    val prefix = substring(md5(concat(lit(salt),
-      col(idCol).cast("string")).cast("binary")), 1, 8)
+    val prefix = md5Prefix(salt, col(idCol))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(groupCol).orderBy(prefix.asc, col(idCol).asc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
@@ -288,8 +287,7 @@ object Sampling {
       }
     df
       .select(col(idCol), col(stratumCol),
-        substring(md5(concat(lit(salt), col(idCol).cast("string"))
-          .cast("binary")), 1, 8).as("_hp"))
+        md5Prefix(salt, col(idCol)).as("_hp"))
       .withColumn("_rn", row_number().over(w).cast("long"))
       .withColumn("_n", count(lit(1))
         .over(Window.partitionBy(stratumCol)))
@@ -380,8 +378,7 @@ object Sampling {
     import org.apache.spark.sql.expressions.Window
     val alloc = temperatureAllocRaw(df, groupCol, budget)
       .select(col(groupCol), col("n_docs"), col("alloc_raw"))
-    val prefix = substring(md5(concat(lit(salt),
-      col(idCol).cast("string")).cast("binary")), 1, 8)
+    val prefix = md5Prefix(salt, col(idCol))
     val w = Window.partitionBy(groupCol).orderBy(prefix.asc, col(idCol).asc)
     df.select(col(idCol), col(groupCol))
       .join(broadcast(alloc), Seq(groupCol))
@@ -405,8 +402,7 @@ object Sampling {
                         salt: String = "temp"): DataFrame = {
     val alloc = temperatureAlloc(df, groupCol, budget)
       .select(col(groupCol), col("alloc"))
-    val prefix = substring(md5(concat(lit(salt),
-      col(idCol).cast("string")).cast("binary")), 1, 8)
+    val prefix = md5Prefix(salt, col(idCol))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(groupCol).orderBy(prefix.asc, col(idCol).asc)
     df.join(broadcast(alloc), Seq(groupCol))
@@ -562,8 +558,7 @@ object Sampling {
     val df = graft.Fanout.maybe(df0, idCol)
     val bounds = df.agg(min(col(scoreCol)).cast("long").as("_mn"),
       max(col(scoreCol)).cast("long").as("_mx"))
-    val prefix = substring(md5(concat(lit(salt),
-      col(idCol).cast("string")).cast("binary")), 1, 8)
+    val prefix = md5Prefix(salt, col(idCol))
     val banded = df.select(col(idCol), col(scoreCol))
       .crossJoin(broadcast(bounds))
       .withColumn("bucket", expr(

@@ -31,6 +31,32 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(Bench.previousMins(pre12) === Map.empty)
   }
 
+  test("the gates take a baseline only from the same scale factor; a " +
+    "mismatch names both values and leaves the tables empty") {
+    val sf01 =
+      """{"metric":"total","queries":{"graph_kcore":0.493},"queries_min":{"graph_kcore":0.400},"canary_before":{"a":0.100},"sf":"/data/sf0.1"}"""
+    val wrapped =
+      """{"n":5,"sf": 0.1,"tail":"...{\"queries\":{\"a\":1.250},\"sf\":\"/d/sf0.1\"}...","parsed":null}"""
+    assert(Bench.previousSf(sf01) === Some("/data/sf0.1"))
+    assert(Bench.previousSf(wrapped) === Some("/d/sf0.1"))
+    assert(Bench.sameScaleBaseline(sf01, "/data/sf0.1") === Right(sf01))
+    assert(Bench.sameScaleBaseline(sf01, "/elsewhere/sf0.1/") === Right(sf01))
+    // the graph_kcore case: an sf0.01 run against the sf0.1 artifact
+    val mismatch = Bench.sameScaleBaseline(sf01, "/data/sf0.01")
+    assert(mismatch.isLeft)
+    val msg = mismatch.left.getOrElse("")
+    assert(msg.startsWith("[bench]") && msg.contains("/data/sf0.1 ") &&
+      msg.contains("/data/sf0.01"), msg)
+    assert(Bench.sameScaleBaseline("""{"queries":{"q":1.0}}""", "sf0.1")
+      .left.exists(_.contains("unrecorded")))
+    // what main gates with after the mismatch: nothing flags, factor 1
+    val prev = mismatch.toOption
+    val medians = prev.map(Bench.previousMedians).getOrElse(Map.empty)
+    assert(Bench.flagRegressions(Seq("graph_kcore" -> 1.141), medians,
+      1.5, 0.3).isEmpty)
+    assert(Bench.canaryLoadFactor(prev, Seq("a" -> 0.5)) === 1.0)
+  }
+
   test("min gate flags a planted slowdown the median gate misses " +
     "(the r13 dedup_winnowing shape: 0.491 -> 1.011s best-of-N)") {
     // prev: median 0.786 / min 0.491; cur: median 1.083 / min 1.011.

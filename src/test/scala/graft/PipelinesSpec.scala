@@ -5,22 +5,19 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** The three reference entry points as pipelines, driven end to end over
-  * temp directories: real zip inbox for E1, the csv/xlsx fixtures (plus a
-  * bad file) for E2, synthetic linked tables for E3's vote + snapshot. */
+  * temp directories: the two-zip [[graft.sources.DeclarationZipFixture]]
+  * inbox for E1, the csv/xlsx fixtures (plus a bad file) for E2,
+  * synthetic linked tables for E3's vote + snapshot. */
 class PipelinesSpec extends SparkSpec {
 
   test("importDeclarations drains the inbox into the history table") {
-    val root = Files.createTempDirectory("pipe_b").toString
-    val inbox = s"$root/inbox"
-    new java.io.File(inbox).mkdirs()
-    Files.copy(
-      java.nio.file.Paths.get(
-        "/root/reference/uploads/xml_history/processed/IPC250403408EX.zip"),
-      java.nio.file.Paths.get(s"$inbox/IPC250403408EX.zip"))
-    Pipelines.importDeclarations(spark, inbox, s"$root/history",
+    val root = Files.createTempDirectory("pipe_b")
+    val inbox = Files.createDirectories(root.resolve("inbox"))
+    graft.sources.DeclarationZipFixture.corpus(inbox)
+    Pipelines.importDeclarations(spark, inbox.toString, s"$root/history",
       s"$root/archive", s"$root/ckpt").awaitTermination()
     val out = spark.read.parquet(s"$root/history")
-    assert(out.count() === 2306L) // golden, import_xml.log
+    assert(out.count() === graft.sources.DeclarationZipFixture.keptRows)
     assert(out.columns.contains("tot_tax_amt")) // extended fields flow through
   }
 

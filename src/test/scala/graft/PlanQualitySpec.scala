@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.graft.{HashFamily, MinHashSignature, ShingleHashes, SimHash64}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
 /** Plan-shape assertions: the properties that keep these operators viable
   * at cluster scale, pinned as tests so a regression in plan quality fails
@@ -263,6 +266,15 @@ class PlanQualitySpec extends SparkSpec {
       "poisson_weights", "minhash_signature", "char_ngram_total",
       "repetition_signals", "int8_codes", "simhash64",
       "winnow_fingerprints")
+    // each hash family's kernel name falls under one of the names swept
+    val toks = Literal.create(null, ArrayType(StringType))
+    val hashes = Literal.create(null, ArrayType(LongType))
+    for (f <- Seq(HashFamily.Xxh64, HashFamily.Md5);
+         e <- Seq(ShingleHashes(toks, 2, f), MinHashSignature(hashes, 4, f),
+           SimHash64(toks, f))) {
+      assert(kernels.exists(k => s"size($e".contains(s"size($k")),
+        s"${e.prettyName} escapes the sweep")
+    }
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         // plan-build failures are owned by the correctness gate, not here

@@ -177,6 +177,53 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(both.where($"fast" =!= $"slow").count() === 0L)
   }
 
+  test("ShingleHashes, MinHashSignature, SimHash64: interpreted eval == " +
+    "generated code, in both hash families") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.graft.{HashFamily, MinHashSignature, ShingleHashes, SimHash64}
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val corpus = graft.Tables(spark, sfDir, "documents")
+      .select(tokens($"text")).as[Seq[String]].collect().toSeq
+    val edge = Seq(null, Seq(), Seq(""), Seq("solo"), Seq("", "a", "", "b"),
+      Seq("a", null, "b"), Seq("x", "x", "x", "x"))
+    val rows = (edge ++ corpus).map { t =>
+      InternalRow(if (t == null) null
+        else new GenericArrayData(t.map(s =>
+          if (s == null) null else UTF8String.fromString(s)).toArray[Any]))
+    }
+    val toks = BoundReference(0, ArrayType(StringType, containsNull = true),
+      nullable = true)
+    def longs(a: ArrayData) = if (a == null) null else a.toLongArray().toSeq
+    for (family <- Seq(HashFamily.Xxh64, HashFamily.Md5)) {
+      val sh = ShingleHashes(toks, 2, family)
+      val kernels = Seq(sh, MinHashSignature(sh, 16, family), SimHash64(toks, family))
+      val generated = GenerateUnsafeProjection.generate(kernels)
+      var nulls = 0
+      rows.foreach { row =>
+        val out = generated(row)
+        kernels.zipWithIndex.foreach { case (e, i) =>
+          val interpreted = e.eval(row)
+          val codegen = if (out.isNullAt(i)) null
+            else if (e.isInstanceOf[SimHash64]) out.getLong(i)
+            else out.getArray(i)
+          if (interpreted == null) nulls += 1
+          val same = e match {
+            case _: SimHash64 => interpreted == codegen
+            case _ => longs(interpreted.asInstanceOf[ArrayData]) ==
+              longs(codegen.asInstanceOf[ArrayData])
+          }
+          assert(same, s"${e.prettyName} on ${row.getArray(0)}")
+        }
+      }
+      assert(nulls > 0, s"$family: the null paths must be exercised")
+    }
+  }
+
   test("codegen'd Shingles expression == interpreted HOF formulation") {
     import spark.implicits._
     val docs = graft.Tables(spark, sfDir, "documents")

@@ -75,8 +75,8 @@ class DecontaminationSpec extends SparkSpec {
     val str = Decontamination.contamination(corpus, bench, "doc_id", "text", 4)
       .select("doc_id", "n_distinct_hits")
       .as[(Long, Long)].collect().toMap
-    val md5k = Decontamination
-      .contaminationMd5Keys(corpus, bench, "doc_id", "text", 4)
+    val md5k = Decontamination.contaminationHashed(corpus, bench, "doc_id",
+      "text", 4, org.apache.spark.sql.graft.HashFamily.Md5)
       .as[(Long, Long)].collect().toMap
     assert(md5k === str)
     assert(str.nonEmpty, "test corpus must exercise the overlap path")

@@ -77,6 +77,24 @@ class DedupSpec extends SparkSpec {
     assert(cappedSim.where($"hamming" =!= 0).count() === 0L)
   }
 
+  test("shingleGroupsFor keys its memo by hash family: one dataset key " +
+    "never hands one family's collapse to the other") {
+    import spark.implicits._
+    import org.apache.spark.sql.graft.HashFamily
+    def sets(df: DataFrame) = df.select($"key").as[Seq[Long]].collect().toSet
+    val key = "family-memo-spec"
+    val xxh = Dedup.shingleGroupsFor(docs, "doc_id", "text", 2, key)
+    val md5 = Dedup.shingleGroupsFor(docs, "doc_id", "text", 2, key, HashFamily.Md5)
+    assert(sets(md5) === sets(Dedup.shingleGroups(docs, "doc_id", "text", 2,
+      HashFamily.Md5)))
+    assert(sets(xxh) === sets(Dedup.shingleGroups(docs, "doc_id", "text", 2)))
+    assert(sets(xxh) !== sets(md5))
+    // a second request per family is the memo's hit, not the other family
+    assert(Dedup.shingleGroupsFor(docs, "doc_id", "text", 2, key) eq xxh)
+    assert(Dedup.shingleGroupsFor(docs, "doc_id", "text", 2, key,
+      HashFamily.Md5) eq md5)
+  }
+
   test("two-step API: pairs from a parquet-persisted groups table match the one-call path") {
     val oneCall = pairSet(Dedup.minhashLshPairs(docs, "doc_id", "text", 2, 32, 8, 0.8))
     val path = java.nio.file.Files.createTempDirectory("groups").toString + "/g"
@@ -343,11 +361,19 @@ class DedupSpec extends SparkSpec {
 
   test("md5 signature twins match a local recompute of the same formulas") {
     import spark.implicits._
+    import org.apache.spark.sql.graft.{HashFamily, MinHashSignature}
+    import graft.functions.GraftFunctions.shingleHashes
     def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val docs = Seq((1L, "alpha beta gamma"), (2L, "Alpha  Beta GAMMA"),
       (3L, "delta epsilon zeta eta"), (4L, ""), (5L, "solo"))
       .toDF("doc_id", "text").repartition(3)
+    // shingle hashes: the 16-hex md5 prefix of each space-joined shingle
+    val sh = docs.select($"doc_id", shingleHashes($"text", 2, HashFamily.Md5))
+      .as[(Long, Seq[Long])].collect().toMap
+    def prefix64(s: String) = java.lang.Long.parseUnsignedLong(md5hex(s).take(16), 16)
+    assert(sh(1L) === Seq("alpha beta", "beta gamma").map(prefix64))
+    assert(sh(5L).isEmpty) // < k tokens
     // simhash: 60-bit md5 prefix per token, signed votes, sign packing
     def simhashLocal(toks: Seq[String]): Long = {
       val hs = toks.map(t => java.lang.Long.parseLong(md5hex(t).take(15), 16))
@@ -356,7 +382,7 @@ class DedupSpec extends SparkSpec {
         if (v > 0) 1L << i else 0L
       }.sum
     }
-    val sim = Dedup.simhashMd5Signatures(docs, "doc_id", "text")
+    val sim = Dedup.simhash(docs, "doc_id", "text", HashFamily.Md5)
       .as[(Long, Long)].collect().toMap
     assert(sim(1L) === simhashLocal(Seq("alpha", "beta", "gamma")))
     assert(sim(1L) === sim(2L)) // normalization: lower + whitespace split
@@ -364,13 +390,13 @@ class DedupSpec extends SparkSpec {
     assert(sim(5L) === simhashLocal(Seq("solo")))
     assert(!sim.contains(4L)) // no tokens -> absent
     // minhash: 28-bit md5 prefix per distinct 2-shingle, (a·x+b) mod p mins
-    val consts = Dedup.minhashMd5Consts(32)
+    val consts = MinHashSignature.md5Consts(32)
     def minhashLocal(shingles: Seq[String]): Seq[Long] = {
       val hs = shingles.map(s => java.lang.Long.parseLong(md5hex(s).take(7), 16))
       consts.map { case (a, b) => hs.map(x => (x * a + b) % 2147483647L).min }
     }
-    val mh = Dedup.minhashMd5Signatures(docs, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r).toMap
+    val mh = Dedup.minhashSignatures(docs, "doc_id", "text",
+      family = HashFamily.Md5).collect().map(r => r.getLong(0) -> r).toMap
     assert((1 to 32).map(mh(1L).getLong) ===
       minhashLocal(Seq("alpha beta", "beta gamma")))
     assert((1 to 32).map(mh(3L).getLong) ===
@@ -558,8 +584,12 @@ class DedupSpec extends SparkSpec {
       (4L, "completely different content entirely unrelated here"),
       (5L, "x")) // too short to shingle -> absent
       .toDF("doc_id", "text")
-    val got = Dedup.minhashMd5LshPairs(docs, "doc_id", "text",
-      k = 2, numHashes = 32, bands = 8, minJaccard = 0.8)
+    val md5 = org.apache.spark.sql.graft.HashFamily.Md5
+    val got = Dedup.minhashLshPairsFromGroups(
+        Dedup.shingleGroups(docs, "doc_id", "text", 2, md5),
+        numHashes = 32, bands = 8, minJaccard = 0.8, family = md5)
+      .select($"id_a", $"id_b", $"intersection".cast("long"),
+        $"union_size".cast("long"))
       .as[(Long, Long, Long, Long)].collect()
       .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
     // identical sets: intra pair at full overlap (6 shingles)

@@ -74,6 +74,11 @@ object DeclarationZipFixture {
       "m4.xml" -> Seq(h("H1"), h(""), h("H1")),
       "m5.xml" -> Seq(h("H10"), h("H11"))))
 
+  /** Rows of the corpus's real members with a non-blank HAWB: what a
+    * cleansed read or drain of [[corpus]] keeps. */
+  val keptRows: Long =
+    zips.flatMap(_._2).flatMap(_._2).count(_.hawb.exists(_.trim.nonEmpty)).toLong
+
   /** Members that hold declaration XML but must never be read. */
   private val junk = Seq("__MACOSX/._m1.xml", "readme.txt")
 

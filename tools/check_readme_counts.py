@@ -13,7 +13,10 @@ nit #1), so they are now CHECKED, not trusted:
     the suite count ScalaTest reports;
   - every `*.scala` file the Layout block names must exist: an indented
     name resolves against the directory line above it (a line such as
-    `src/main/scala/graft/`), an unindented one against the repo root.
+    `src/main/scala/graft/`), an unindented one against the repo root;
+  - every backticked name in the "Custom codegen'd Catalyst expressions"
+    paragraph must be a file or a case class under the kernel directory,
+    so a deleted kernel cannot stay listed.
 
 Usage: python3 tools/check_readme_counts.py   (exit 1 on any mismatch)
 """
@@ -57,6 +60,24 @@ def missing_layout_files(readme):
     return missing
 
 
+KERNEL_DIR = "src/main/scala/org/apache/spark/sql/graft"
+
+
+def unknown_kernel_names(readme):
+    """Backticked names in the kernel paragraph with no file or case class
+    behind them under KERNEL_DIR."""
+    para = re.search(r"^- Custom codegen'd Catalyst expressions(.*?)(?=^- |^\s*$)",
+                     readme, re.M | re.S)
+    if not para:
+        return ["README has no \"Custom codegen'd Catalyst expressions\" paragraph"]
+    known = set()
+    for f in (ROOT / KERNEL_DIR).glob("*.scala"):
+        known.add(f.stem)
+        known.update(re.findall(r"^\s*case class (\w+)", f.read_text(), re.M))
+    return [n for n in re.findall(r"`([A-Za-z_]\w*)`", para.group(1))
+            if n not in known]
+
+
 def main():
     queries, oracles = registry_counts()
     tests = test_count()
@@ -81,13 +102,15 @@ def main():
             bad.append(f"  stale test count {v} (want {tests})")
     bad += [f"  Layout names a missing file: {p}"
             for p in missing_layout_files(readme)]
+    bad += [f"  kernel paragraph names no kernel under {KERNEL_DIR}: {n}"
+            for n in unknown_kernel_names(readme)]
     if bad:
         print(f"README out of date (queries={queries}, "
               f"oracles={oracles}, tests={tests}):")
         print("\n".join(bad))
         sys.exit(1)
     print(f"README OK: {queries} queries, {oracles} oracles, "
-          f"{tests} tests, every Layout file present")
+          f"{tests} tests, every Layout file and listed kernel present")
 
 
 if __name__ == "__main__":
